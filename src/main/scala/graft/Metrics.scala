@@ -10,6 +10,11 @@ import scala.collection.mutable
   * for machine consumption, [[jsonSummary]] renders the accumulated
   * window as one JSON object (the analog of the reference's structured
   * per-job stats logging, P/bigquery/query_runner.py:63-134).
+  *
+  * Timers of steps that run concurrently ([[Concurrently]]) overlap in
+  * wall time: promote's per-table `promote_dir_probe_time` and
+  * `promote_validate_time` samples are each timed on their own thread,
+  * so their sum can exceed the promote step's wall time.
   */
 object Metrics {
 

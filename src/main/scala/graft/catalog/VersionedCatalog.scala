@@ -304,6 +304,14 @@ final class VersionedCatalog(val root: String,
     * before the single pointer move; a crash mid-commit publishes
     * nothing.
     *
+    * The DataFrames (every table's rewrite or appends) are written
+    * concurrently, one thread each ([[graft.Concurrently]]). The pointer
+    * move runs once, on the caller's thread, after every write has
+    * succeeded. If any write fails, the commit waits for the others to
+    * end and rethrows the first failure in `deltas` order unwrapped;
+    * nothing is published, and the dirs its siblings already wrote are
+    * orphans for [[vacuum]].
+    *
     * `expected`: the commit id the caller READ at (for read-modify-write
     * cycles). If another writer published since, the commit throws
     * [[ConcurrentCommitException]] before materializing anything —
@@ -325,21 +333,25 @@ final class VersionedCatalog(val root: String,
     val nonce = java.lang.Long.toHexString(
       java.util.concurrent.ThreadLocalRandom.current().nextLong()
         & 0xffffffffL)
-    val newDirs = deltas.map { case (table, d) =>
+    deltas.foreach { case (table, d) =>
       require(d.rewrite.isEmpty || d.appends.isEmpty,
         s"$table: rewrite and append are exclusive")
-      val existing = dirs.getOrElse(table, Nil)
-      val kept = existing
+    }
+    // every rewrite and append of every table is its own write job; they
+    // share nothing but the nonce, so they materialize concurrently
+    val written = graft.Concurrently.all(deltas.toSeq.flatMap {
+      case (table, d) =>
+        (d.rewrite.map(_ -> "").toSeq ++ d.appends).map { case (df, l) =>
+          () => table -> write(df, table, next, nonce, l)
+        }
+    }).groupMap(_._1)(_._2)
+    val newDirs = deltas.map { case (table, d) =>
+      val fresh = written.getOrElse(table, Nil)
+      val kept = dirs.getOrElse(table, Nil)
         .filterNot(p => d.dropLabels.exists(l =>
           Paths.get(p).getFileName.toString.endsWith(s"_$l")))
         .filterNot(d.dropDirs.contains)
-      val updated = d.rewrite match {
-        case Some(df) => Seq(write(df, table, next, nonce, ""))
-        case None =>
-          kept ++ d.appends.map { case (df, l) =>
-            write(df, table, next, nonce, l) }
-      }
-      table -> updated
+      table -> (if (d.rewrite.isDefined) fresh else kept ++ fresh)
     }
     publish(next, dirs ++ newDirs)
     next

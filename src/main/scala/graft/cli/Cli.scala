@@ -559,7 +559,9 @@ object Cli {
 
       case "upload" :: root :: exportRoot :: remoteRoot :: rest =>
         val opts = parseServiceOpts("upload", rest, allowStage = true)
-        val promoter = new Promoter(spark, new VersionedCatalog(root), exportRoot)
+        val promoter = new Promoter(spark,
+          new VersionedCatalog(root, VersionedCatalog.ppdbWriteOptions),
+          exportRoot)
         promoter.init()
         // --stage collapses the reference's Pub/Sub→Dataflow staging job
         // into the uploader's notification hook: each fully-uploaded
@@ -584,7 +586,9 @@ object Cli {
       case "promote" :: root :: exportRoot :: rest =>
         val opts = parseServiceOpts("promote", rest, allowStage = false,
           allowLoop = true)
-        val promoter = new Promoter(spark, new VersionedCatalog(root), exportRoot)
+        val promoter = new Promoter(spark,
+          new VersionedCatalog(root, VersionedCatalog.ppdbWriteOptions),
+          exportRoot)
         promoter.init()
         graft.Metrics.reset()
         if (opts.loop || opts.single) {

@@ -22,6 +22,13 @@ import graft.schema.{PpdbSchema, UpdateRecord, VersionTuple}
   *     delete, status=promoted — all published as ONE atomic commit
   *     (chunk_promoter.py:117-348).
   *
+  * Concurrency: the Spark jobs of one step that do not depend on each
+  * other run at the same time ([[graft.Concurrently]]) — export's three
+  * table writes, promote's four per-table chains (dir probe, base read,
+  * J6 validation) and every write of a commit. Each step still waits
+  * for all of its jobs before the next begins, errors surface in table
+  * order, and the catalog pointer moves on the caller's thread.
+  *
   * Scale notes: staging tables are partitioned by apdb_replica_chunk so
   * the staged-row delete (S15) is a partition drop, not a rewrite; the
   * promote rewrite touches internal tables once per batch of chunks, not
@@ -87,13 +94,16 @@ final class Promoter(spark: SparkSession, val catalog: VersionedCatalog,
       "DiaSource" -> chunk.diaSources,
       "DiaForcedSource" -> chunk.diaForcedSources)
     val hconf = spark.sparkContext.hadoopConfiguration
-    val dirs = tables.map { case (t, df) =>
-      val d = s"$dir/$t"
-      // snappy parquet, subchunk column dropped (S4 exclude_columns)
-      df.drop("apdb_replica_subchunk")
-        .write.mode("overwrite").option("compression", "snappy").parquet(d)
-      t -> d
-    }
+    // the three table writes are independent jobs: run them together
+    val dirs = graft.Concurrently.all(tables.toSeq.map { case (t, df) =>
+      () => {
+        val d = s"$dir/$t"
+        // snappy parquet, subchunk column dropped (S4 exclude_columns)
+        df.drop("apdb_replica_subchunk")
+          .write.mode("overwrite").option("compression", "snappy").parquet(d)
+        t -> d
+      }
+    }).toMap
     val rowsWritten = dirs.values.map { d =>
       Option(new java.io.File(d).listFiles()).getOrElse(Array.empty)
         .filter(_.getName.endsWith(".parquet"))
@@ -295,58 +305,58 @@ final class Promoter(spark: SparkSession, val catalog: VersionedCatalog,
     def probe(table: String)(body: => Seq[String]): Seq[String] =
       graft.Metrics.time("promote_dir_probe_time", batchTag,
         "table" -> table)(body)
-    val objAffected = probe("internal.DiaObject") {
-      catalog.dirsTouching(spark, "internal.DiaObject",
-        Seq("diaObjectId"), objScope)
+
+    // Each output table's chain (dir probe, then base read, then J6
+    // validation) yields the dirs it replaces and the rows replacing
+    // them. The chains share no state, so they run concurrently; nothing
+    // commits until all have finished, and a failure surfaces as the
+    // first in chain order (DiaObject, DiaObjectLast, DiaSource,
+    // DiaForcedSource), whatever the thread timing.
+    val objectChain = () => {
+      val objAffected = probe("internal.DiaObject") {
+        catalog.dirsTouching(spark, "internal.DiaObject",
+          Seq("diaObjectId"), objScope)
+      }
+      val objBase0 =
+        if (objAffected.isEmpty) emptyDf(internalObj.schema)
+        else catalog.readDirs(spark, objAffected, internalObj.columns.toSeq)
+      // MERGE semantics (the reference's WHEN MATCHED UPDATE): staged rows
+      // REPLACE internal rows sharing their primary key, so a chunk
+      // re-exported in update mode and promoted again lands exactly once.
+      // Normal-flow PKs are new — the anti-join drops nothing. The dir
+      // probe above already covers same-PK rows (same diaObjectId).
+      val objBase = objBase0.join(
+        stagedObj.select(col("diaObjectId"), col("validityStartMjdTai"))
+          .distinct(),
+        Seq("diaObjectId", "validityStartMjdTai"), "left_anti")
+      val unionObj = objBase.unionByName(
+        stagedObj.select(internalObj.columns.map(col).toSeq: _*))
+      val filled =
+        PpdbOps.fillValidityEnd(unionObj, stagedObj.select("diaObjectId"))
+      // J6: an update record targeting a row that was never promoted must
+      // ABORT the batch (mergePatch's left-outer join would silently drop
+      // it) — same contract the direct-store path enforces. The scoped
+      // rows are a sound validation target: any existing row with a
+      // patched key lives in an affected dir (the dir probes include the
+      // patch keys), so "missing from scope" == "missing from table".
+      objPatch.foreach(p => requireNoDangling("DiaObject", filled, p, objSpec))
+      (objAffected, Some(
+        objPatch.fold(filled)(p => PpdbOps.mergePatch(filled, p, objSpec))))
     }
-    val objBase0 =
-      if (objAffected.isEmpty) emptyDf(internalObj.schema)
-      else catalog.readDirs(spark, objAffected, internalObj.columns.toSeq)
-    // MERGE semantics (the reference's WHEN MATCHED UPDATE): staged rows
-    // REPLACE internal rows sharing their primary key, so a chunk
-    // re-exported in update mode and promoted again lands exactly once.
-    // Normal-flow PKs are new — the anti-join drops nothing. The dir
-    // probe above already covers same-PK rows (same diaObjectId).
-    val objBase = objBase0.join(
-      stagedObj.select(col("diaObjectId"), col("validityStartMjdTai"))
-        .distinct(),
-      Seq("diaObjectId", "validityStartMjdTai"), "left_anti")
-    val unionObj = objBase.unionByName(
-      stagedObj.select(internalObj.columns.map(col).toSeq: _*))
-    val filled =
-      PpdbOps.fillValidityEnd(unionObj, stagedObj.select("diaObjectId"))
-    // J6: an update record targeting a row that was never promoted must
-    // ABORT the batch (mergePatch's left-outer join would silently drop
-    // it) — same contract the direct-store path enforces. The scoped
-    // rows are a sound validation target: any existing row with a
-    // patched key lives in an affected dir (the dir probes include the
-    // patch keys), so "missing from scope" == "missing from table".
-    objPatch.foreach(p => requireNoDangling("DiaObject", filled, p, objSpec))
-    val objPatched =
-      objPatch.fold(filled)(p => PpdbOps.mergePatch(filled, p, objSpec))
 
     // S14: the public snapshot is scoped the same way as the source
     // table — only the snapshot dirs holding a scoped object id are
-    // rewritten: their out-of-scope rows carry over, the in-scope rows
-    // are replaced by the scope's new open intervals (an object whose
-    // interval closed simply disappears). Every other snapshot dir's
-    // bytes are untouched. snapNew is restricted to the SCOPE: objPatched
-    // also carries out-of-scope rows that merely shared a dir with scoped
-    // ids, and those keep their existing snapshot rows via snapBase.
-    val snapNew = PpdbOps.latestSnapshot(
-      objPatched.join(broadcast(objScope), Seq("diaObjectId"), "left_semi"))
+    // rewritten. Its chain is the probe alone: its rows derive from the
+    // DiaObject chain's, so they are built once both have finished.
     val snapTable = "public.DiaObjectLast"
-    val snapAffected =
-      if (!catalog.exists(snapTable)) Nil
-      else probe(snapTable) {
-        catalog.dirsTouching(spark, snapTable, Seq("diaObjectId"), objScope)
-      }
-    val snapBase =
-      if (snapAffected.isEmpty) emptyDf(snapNew.schema)
-      else catalog.readDirs(spark, snapAffected, snapNew.columns.toSeq)
-        .join(broadcast(objScope), Seq("diaObjectId"), "left_anti")
-    val snapshotDelta = TableDelta(dropDirs = snapAffected.toSet,
-      appends = Seq(snapBase.unionByName(snapNew) -> batchLabel))
+    val snapshotChain = () => {
+      val snapAffected =
+        if (!catalog.exists(snapTable)) Nil
+        else probe(snapTable) {
+          catalog.dirsTouching(spark, snapTable, Seq("diaObjectId"), objScope)
+        }
+      (snapAffected, Option.empty[DataFrame])
+    }
 
     // fact tables: MERGE, not append — the dirs holding a row whose PK
     // the staged delta carries (a re-promoted update-mode chunk) or a
@@ -355,42 +365,62 @@ final class Promoter(spark: SparkSession, val catalog: VersionedCatalog,
     // the zone-map prune inside dirsTouching rejects every dir against
     // the fresh id range DRIVER-side, `affected` is empty, and the
     // append path costs one tiny bounds agg over the delta keys.
-    val factWrites: Map[String, TableDelta] =
-      Seq("DiaSource", "DiaForcedSource").map { t =>
-        val name = s"internal.$t"
-        val internal = catalog.read(spark, name)
-        val delta = catalog.read(spark, s"staging.$t").where(inChunks)
-          .drop("apdb_replica_chunk")
-          .select(internal.columns.map(col).toSeq: _*)
-        val spec = PpdbOps.mergeSpecs(t)
-        val deltaKeys = delta.select(spec.keys.map(col): _*).distinct()
-        val keys = (Seq(deltaKeys) ++
-          (if (touched(t)) Seq(PpdbOps.patchKeys(latest, spec, internal))
-           else Nil)).reduce(_.unionByName(_)).distinct()
-        val affected =
-          probe(name)(catalog.dirsTouching(spark, name, spec.keys, keys))
-        if (affected.isEmpty && !touched(t))
-          name -> TableDelta(appends = Seq(delta -> batchLabel))
-        else {
-          val base0 =
-            if (affected.isEmpty) emptyDf(internal.schema)
-            else catalog.readDirs(spark, affected, internal.columns.toSeq)
-          val base = base0.join(deltaKeys, spec.keys, "left_anti")
-          val rows = base.unionByName(delta)
-          if (touched(t)) {
-            val patch = PpdbOps.buildPatch(latest, spec)
-            requireNoDangling(t, rows, patch, spec) // J6, as above
-            val patched = PpdbOps.mergePatch(rows, patch, spec)
-            name -> TableDelta(dropDirs = affected.toSet,
-              appends = Seq(patched -> batchLabel))
-          } else name -> TableDelta(dropDirs = affected.toSet,
-            appends = Seq(rows -> batchLabel))
-        }
-      }.toMap
+    def factChain(t: String) = () => {
+      val name = s"internal.$t"
+      val internal = catalog.read(spark, name)
+      val delta = catalog.read(spark, s"staging.$t").where(inChunks)
+        .drop("apdb_replica_chunk")
+        .select(internal.columns.map(col).toSeq: _*)
+      val spec = PpdbOps.mergeSpecs(t)
+      val deltaKeys = delta.select(spec.keys.map(col): _*).distinct()
+      val keys = (Seq(deltaKeys) ++
+        (if (touched(t)) Seq(PpdbOps.patchKeys(latest, spec, internal))
+         else Nil)).reduce(_.unionByName(_)).distinct()
+      val affected =
+        probe(name)(catalog.dirsTouching(spark, name, spec.keys, keys))
+      if (affected.isEmpty && !touched(t)) (affected, Some(delta))
+      else {
+        val base0 =
+          if (affected.isEmpty) emptyDf(internal.schema)
+          else catalog.readDirs(spark, affected, internal.columns.toSeq)
+        val base = base0.join(deltaKeys, spec.keys, "left_anti")
+        val rows = base.unionByName(delta)
+        if (touched(t)) {
+          val patch = PpdbOps.buildPatch(latest, spec)
+          requireNoDangling(t, rows, patch, spec) // J6, as above
+          (affected, Some(PpdbOps.mergePatch(rows, patch, spec)))
+        } else (affected, Some(rows))
+      }
+    }
 
-    val internalWrites: Map[String, TableDelta] = factWrites +
-      ("internal.DiaObject" -> TableDelta(dropDirs = objAffected.toSet,
-        appends = Seq(objPatched -> batchLabel)))
+    val Seq((objAffected, objRows), (snapAffected, _),
+        (srcAffected, srcRows), (forcedAffected, forcedRows)) =
+      graft.Concurrently.all(Seq(objectChain, snapshotChain,
+        factChain("DiaSource"), factChain("DiaForcedSource")))
+    def replacing(affected: Seq[String], rows: Option[DataFrame]) =
+      TableDelta(dropDirs = affected.toSet,
+        appends = rows.map(_ -> batchLabel).toSeq)
+    val objPatched = objRows.get
+
+    // the snapshot rows: the snapshot dirs' out-of-scope rows carry over,
+    // the in-scope rows are replaced by the scope's new open intervals
+    // (an object whose interval closed simply disappears). snapNew is
+    // restricted to the SCOPE: objPatched also carries out-of-scope rows
+    // that merely shared a dir with scoped ids, and those keep their
+    // existing snapshot rows via snapBase.
+    val snapNew = PpdbOps.latestSnapshot(
+      objPatched.join(broadcast(objScope), Seq("diaObjectId"), "left_semi"))
+    val snapBase =
+      if (snapAffected.isEmpty) emptyDf(snapNew.schema)
+      else catalog.readDirs(spark, snapAffected, snapNew.columns.toSeq)
+        .join(broadcast(objScope), Seq("diaObjectId"), "left_anti")
+
+    val writes: Map[String, TableDelta] = Map(
+      "internal.DiaObject" -> replacing(objAffected, objRows),
+      snapTable -> replacing(snapAffected,
+        Some(snapBase.unionByName(snapNew))),
+      "internal.DiaSource" -> replacing(srcAffected, srcRows),
+      "internal.DiaForcedSource" -> replacing(forcedAffected, forcedRows))
 
     // S15: staged-row delete = DIRECTORY DROP of the promoted chunks'
     // labeled append dirs (metadata-only, no rewrite)
@@ -403,12 +433,13 @@ final class Promoter(spark: SparkSession, val catalog: VersionedCatalog,
     val chunkTable = setStatus(ids, PpdbSchema.ChunkStatus.Promoted)
 
     // the commit is where the lazily-built merge/fill/patch plans
-    // actually EXECUTE (parquet writes) — this timer is the whole
-    // rewrite cost; the probes/validations above are the only other
-    // jobs promotion runs
+    // actually EXECUTE (parquet writes, one thread per table) — this
+    // timer is the whole rewrite cost. The other jobs promotion runs are
+    // the latest-updates collect, the probes and validations above, and
+    // one footer schema-inference job per spark.read.parquet without a
+    // schema (catalog reads, dirsTouching's and readDirs' per-dir scans)
     graft.Metrics.time("promote_commit_time", batchTag) {
-      catalog.commitAll(internalWrites ++ stagingWrites ++ Map(
-        "public.DiaObjectLast" -> snapshotDelta,
+      catalog.commitAll(writes ++ stagingWrites ++ Map(
         "PpdbReplicaChunk" -> TableDelta(rewrite = Some(chunkTable))),
         Some(expected))
     }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.catalog.VersionedCatalog
 
 class CatalogSpec extends SparkSpec {
@@ -31,6 +33,54 @@ class CatalogSpec extends SparkSpec {
     assert(cat.vacuum() >= 1)
     assert(!Files.exists(orphan))
     assert(cat.read(spark, "a").count() == 1)
+  }
+
+  test("a write failing inside a concurrent multi-table commit surfaces " +
+      "unwrapped and publishes nothing; vacuum sweeps its siblings' dirs") {
+    import graft.catalog.TableDelta
+    import org.apache.spark.sql.functions.{col, udf}
+    val cat = new VersionedCatalog(tmpDir("cat"))
+    cat.commit(Map("a" -> Seq(1).toDF("x"), "b" -> Seq(1).toDF("x"),
+      "c" -> Seq(1).toDF("x")))
+    val pointer = Paths.get(cat.root, "_CURRENT")
+    val pointerBefore = Files.readAllBytes(pointer).toSeq
+    val before = cat.current
+    val boom = udf { (x: Int) =>
+      if (x == 2) throw new IllegalStateException("boom-in-write"); x }
+    val failing = Seq(1, 2, 3).toDF("x").select(boom(col("x")).as("x"))
+    // the exception the failing write throws when run on its own
+    val alone = intercept[Exception] {
+      failing.write.parquet(Paths.get(tmpDir("alone"), "x").toString)
+    }
+    val e = intercept[Exception] {
+      cat.commitAll(Map(
+        "a" -> TableDelta(appends = Seq(Seq(5, 6).toDF("x") -> "ok")),
+        "b" -> TableDelta(rewrite = Some(failing)),
+        "c" -> TableDelta(rewrite = Some(Seq(7).toDF("x")))))
+    }
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], e)
+    assert(e.getClass == alone.getClass, e)
+    def chain(t: Throwable): Iterator[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+    assert(chain(e).exists(x => String.valueOf(x.getMessage)
+      .contains("boom-in-write")), e)
+    // nothing published: same pointer bytes, same dir list per table
+    assert(Files.readAllBytes(pointer).toSeq == pointerBefore)
+    assert(cat.current == before)
+    assert(cat.read(spark, "a").as[Int].collect().toSeq == Seq(1))
+    // the siblings finished their writes before the commit failed; those
+    // dirs are unreferenced orphans that vacuum removes
+    def unpublished(t: String): Seq[java.nio.file.Path] = {
+      val live = before._2(t).map(Paths.get(_).toAbsolutePath).toSet
+      val s = Files.list(Paths.get(cat.root, t))
+      try s.iterator().asScala.filter(Files.isDirectory(_))
+        .filterNot(d => live.contains(d.toAbsolutePath)).toSeq
+      finally s.close()
+    }
+    assert(unpublished("a").nonEmpty && unpublished("c").nonEmpty)
+    cat.vacuum()
+    Seq("a", "b", "c").foreach(t => assert(unpublished(t).isEmpty, t))
+    assert(cat.current == before)
   }
 
   test("untouched tables carry over across commits (zero-copy)") {

@@ -334,6 +334,44 @@ class CliSpec extends SparkSpec {
     assert(statuses().values.toSet == Set(ChunkStatus.Promoted))
   }
 
+  test("upload and promote open the catalog with the PPDB write options: " +
+      "promoted files carry diaObjectId bloom filters") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val apdbRoot = tmpDir("bloom-apdb")
+    val catRoot = tmpDir("bloom-cat")
+    val exportRoot = tmpDir("bloom-export")
+    dispatchCapturing("seed-apdb", apdbRoot, "4", "1")
+    dispatchCapturing("run", apdbRoot, catRoot, "--exit-on-empty",
+      "--export", exportRoot)
+    dispatchCapturing("upload", catRoot, exportRoot, tmpDir("bloom-remote"),
+      "--stage")
+    assert(dispatchCapturing("promote", catRoot, exportRoot)
+      .contains("promoted chunks 1"))
+    val hconf = spark.sparkContext.hadoopConfiguration
+    // every row group of every non-empty file has a diaObjectId filter
+    def bloomed(table: String): Boolean = {
+      val files = new VersionedCatalog(catRoot).current._2(table).flatMap { d =>
+        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
+        try walk.iterator().asScala
+          .filter(_.toString.endsWith(".parquet")).toSeq
+        finally walk.close()
+      }
+      val groups = files.flatMap { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toString), hconf))
+        try r.getFooter.getBlocks.asScala.toSeq.map { b =>
+          b.getColumns.asScala.find(_.getPath.toDotString == "diaObjectId")
+            .exists(c => r.readBloomFilter(c) != null)
+        } finally r.close()
+      }
+      groups.nonEmpty && groups.forall(identity)
+    }
+    assert(bloomed("internal.DiaObject"))
+    assert(bloomed("public.DiaObjectLast"))
+  }
+
   test("promote loop runs as a service peer: capped batches, idle " +
       "check-interval sleeping, convergence with concurrent run/upload") {
     import graft.schema.PpdbSchema.ChunkStatus

@@ -47,20 +47,72 @@ class PromoterSpec extends SparkSpec {
   }
 
   test("promote aborts on an update record targeting a missing row (J6)") {
+    import graft.schema.UpdateRecord._
+    // update records for rows that no chunk ever carried, one per table
+    val dangling = Map(
+      "DiaObject" -> UpdateNDiaSources(5000L, 2L, 888888888L, 3),
+      "DiaSource" -> WithdrawDiaSource(5000L, 1L, 999999999L, 60000.5),
+      "DiaForcedSource" ->
+        WithdrawDiaForcedSource(5000L, 3L, 777777777L, 1L, 1L, 60000.5))
+    // the per-table chains validate concurrently, yet the error always
+    // names the first dangling table in the order DiaObject, DiaSource,
+    // DiaForcedSource — checked on three promotes of each batch
+    val cases = Seq(
+      Seq("DiaSource") -> "DiaSource",
+      Seq("DiaObject", "DiaSource", "DiaForcedSource") -> "DiaObject",
+      Seq("DiaSource", "DiaForcedSource") -> "DiaSource")
+    for ((tables, reported) <- cases) {
+      val (p, apdb) = fresh()
+      val cd = apdb.chunkData(1)
+      p.exportChunk(cd.copy(updates = tables.map(t => 1L -> dangling(t))))
+      p.stageChunks(Seq(1L))
+      val staged = p.catalog.currentCommit
+      (1 to 3).foreach { _ =>
+        val e = intercept[IllegalStateException] { p.promote() }
+        assert(e.getMessage.contains(s"missing $reported row"), e.getMessage)
+      }
+      // nothing published: the batch stayed staged, internal tables empty
+      assert(p.catalog.currentCommit == staged, tables)
+      PpdbSchema.dataTables.foreach { t =>
+        assert(p.catalog.read(spark, s"internal.$t").count() == 0, t)
+      }
+      assert(p.catalog.read(spark, "PpdbReplicaChunk")
+        .select("status").head().getString(0) == PpdbSchema.ChunkStatus.Staged)
+    }
+  }
+
+  test("promote's concurrent jobs all carry the caller's Spark local " +
+      "properties (job group)") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val (p, apdb) = fresh()
-    val cd = apdb.chunkData(1)
-    // an update for a diaSourceId that no chunk ever carried
-    val bad = cd.copy(updates = Seq(
-      1L -> graft.schema.UpdateRecord.WithdrawDiaSource(
-        5000L, 1L, 999999999L, 60000.5)))
-    p.exportChunk(bad)
+    // a first promote leaves dirs behind, so the second one probes,
+    // reads bases and rewrites on its worker threads
+    p.exportChunk(apdb.chunkData(1))
     p.stageChunks(Seq(1L))
-    val e = intercept[IllegalStateException] { p.promote() }
-    assert(e.getMessage.contains("missing DiaSource row"), e.getMessage)
-    // nothing published: the batch stayed staged, internal tables empty
-    assert(p.catalog.read(spark, "internal.DiaSource").count() == 0)
-    assert(p.catalog.read(spark, "PpdbReplicaChunk")
-      .select("status").head().getString(0) == PpdbSchema.ChunkStatus.Staged)
+    p.promote()
+    p.exportChunk(apdb.chunkData(2))
+    p.stageChunks(Seq(2L))
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        groups.add(Option(e.properties)
+          .flatMap(ps => Option(ps.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    sc.setJobGroup("promote-under-test", "local-property inheritance")
+    try assert(p.promote() == Seq(2L))
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(l)
+    }
+    val seen = groups.toArray.toSeq
+    assert(seen.size >= 10, s"too few jobs observed: $seen")
+    assert(seen.forall(_ == "promote-under-test"), seen)
   }
 
   test("tampered chunk file fails manifest validation at stage time") {
