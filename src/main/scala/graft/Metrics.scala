@@ -12,28 +12,36 @@ import scala.collection.mutable
   * per-job stats logging, P/bigquery/query_runner.py:63-134).
   *
   * Timers of steps that run concurrently ([[Concurrently]]) overlap in
-  * wall time: promote's per-table `promote_dir_probe_time` and
-  * `promote_validate_time` samples are each timed on their own thread,
-  * so their sum can exceed the promote step's wall time.
+  * wall time: promote's per-table `promote_dir_probe_time` samples are
+  * each timed on their own thread, so their sum can exceed the promote
+  * step's wall time. `promote_validate_time` (J6) overlaps nothing: it
+  * runs on the caller's thread after every probe has ended, on the
+  * driver, and starts no Spark job.
   */
 object Metrics {
 
+  /** One observation; `startMs` is the wall clock (epoch millis) when a
+    * [[time]]d body began, 0 for an untimed record.
+    */
   final case class Sample(metric: String, seconds: Double,
-      tags: Map[String, String], value: Option[Double] = None)
+      tags: Map[String, String], value: Option[Double] = None,
+      startMs: Long = 0L)
 
   private val samples = mutable.ArrayBuffer.empty[Sample]
   @volatile var logEnabled: Boolean = false
 
   def time[A](metric: String, tags: (String, String)*)(body: => A): A = {
+    val startMs = System.currentTimeMillis()
     val t0 = System.nanoTime()
     try body
-    finally record(metric, (System.nanoTime() - t0) / 1e9, tags.toMap)
+    finally record(metric, (System.nanoTime() - t0) / 1e9, tags.toMap,
+      startMs = startMs)
   }
 
   def record(metric: String, seconds: Double,
       tags: Map[String, String] = Map.empty,
-      value: Option[Double] = None): Unit = synchronized {
-    samples += Sample(metric, seconds, tags, value)
+      value: Option[Double] = None, startMs: Long = 0L): Unit = synchronized {
+    samples += Sample(metric, seconds, tags, value, startMs)
     if (logEnabled) {
       val tagStr = if (tags.isEmpty) ""
         else tags.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }

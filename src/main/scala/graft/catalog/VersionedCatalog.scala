@@ -359,15 +359,16 @@ final class VersionedCatalog(val root: String,
 
   private def write(df: DataFrame, table: String, commit: Long,
       nonce: String, label: String): String = {
-    import org.apache.spark.sql.functions.{col, floor, lit, max, min}
+    import org.apache.spark.sql.functions.{col, count, floor, lit, max, min}
     val suffix = if (label.isEmpty) "" else s"_$label"
     val dir = rootPath.resolve(table)
       .resolve(f"v$commit%08d.$nonce$suffix").toString
     // zone-map sidecar: per-dir min/max of the table's NUMERIC probe
-    // columns, collected by observe() DURING the write job (no extra
-    // pass) and written next to the data; dirsTouching prunes whole dirs
-    // on it. Non-numeric stats columns are ignored (their values are not
-    // JSON-safe to interpolate, and the probe only prunes numerically).
+    // columns and the dir's row count, collected by observe() DURING the
+    // write job (no extra pass) and written next to the data;
+    // dirsTouching and mayHold prune whole dirs on it. Non-numeric stats
+    // columns are ignored (their values are not JSON-safe to interpolate,
+    // and the probe only prunes numerically).
     val zCols = statsCols(table).filter(c => df.columns.contains(c) &&
       df.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
     val obs = if (zCols.isEmpty) None
@@ -375,7 +376,7 @@ final class VersionedCatalog(val root: String,
     val observed = obs.fold(df) { o =>
       val aggs = zCols.flatMap(c =>
         Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-      df.observe(o, aggs.head, aggs.tail: _*)
+      df.observe(o, count(lit(1)).as("rows"), aggs: _*)
     }
     layouts(table) match {
       case Some(tb) if observed.columns.contains(tb.column) =>
@@ -408,32 +409,61 @@ final class VersionedCatalog(val root: String,
     dir
   }
 
+  // An empty dir's zone map is `{}`: it holds no value of any column. A
+  // non-empty dir whose stats columns are all null gets no zone map.
   private def writeZoneMap(dir: String, cols: Seq[String],
       m: Map[String, Any]): Unit = {
     val entries = cols.flatMap { c =>
       (m.get(s"min_$c"), m.get(s"max_$c")) match {
         case (Some(lo), Some(hi)) if lo != null && hi != null =>
           Some(s""""${esc(c)}":["$lo","$hi"]""")
-        case _ => None // empty delta: no bounds, dir never pruned
+        case _ => None
       }
     }
-    if (entries.nonEmpty)
+    if (entries.nonEmpty || m.get("rows").contains(0L))
       Files.write(Paths.get(dir, VersionedCatalog.ZoneMapFile),
         s"{${entries.mkString(",")}}".getBytes(StandardCharsets.UTF_8))
     ()
   }
 
-  /** Parsed zone map of a dir: column → (min, max) as BigDecimal. */
-  private def zoneMap(dir: String): Map[String, (BigDecimal, BigDecimal)] = {
+  /** What a dir's zone map says about `column`'s values. */
+  private def zone(dir: String, column: String): VersionedCatalog.Zone = {
+    import VersionedCatalog.{Bounded, Empty, Unbounded}
     val p = Paths.get(dir, VersionedCatalog.ZoneMapFile)
-    if (!Files.exists(p)) return Map.empty
+    if (!Files.exists(p)) return Unbounded
     val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+    if (json.trim == "{}") return Empty
     """"((?:[^"\\]|\\.)*)":\["([^"]*)","([^"]*)"\]""".r
-      .findAllMatchIn(json).flatMap { m =>
-        try Some(unesc(m.group(1)) ->
-          ((BigDecimal(m.group(2)), BigDecimal(m.group(3)))))
+      .findAllMatchIn(json).find(m => unesc(m.group(1)) == column)
+      .flatMap { m =>
+        try Some(Bounded(BigDecimal(m.group(2)), BigDecimal(m.group(3))))
         catch { case _: NumberFormatException => None }
-      }.toMap
+      }.getOrElse(Unbounded)
+  }
+
+  /** A predicate on `field` — one of `table`'s zone-map columns — that
+    * holds for every value some row of the table carries: the envelope of
+    * its dirs' zone maps, read on the driver. A key whose `field` falls
+    * outside it is in no dir, so a probe or a scoped merge can leave it
+    * out. None when no dir holds a row; `lit(true)` when some dir cannot
+    * bound the column (no zone map, or a non-numeric column).
+    */
+  def mayHold(table: String,
+      field: org.apache.spark.sql.types.StructField)
+      : Option[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    import VersionedCatalog.{Bounded, Empty, Unbounded}
+    val zones = current._2.getOrElse(table, Nil).map(zone(_, field.name))
+      .filter(_ != Empty)
+    if (zones.isEmpty) None
+    else if (zones.contains(Unbounded) || !field.dataType
+        .isInstanceOf[org.apache.spark.sql.types.NumericType]) Some(lit(true))
+    else {
+      val bs = zones.collect { case b: Bounded => b }
+      def typed(v: BigDecimal) = lit(v.toString).cast(field.dataType)
+      Some(col(field.name).between(typed(bs.map(_.lo).min),
+        typed(bs.map(_.hi).max)))
+    }
   }
 
   /** Read an explicit subset of a table's data dirs (the scoped-patch
@@ -447,64 +477,75 @@ final class VersionedCatalog(val root: String,
       .reduce(_ unionByName _)
   }
 
-  /** The table's data dirs that contain at least one row whose `keyCols`
-    * match a row of `keys` — the dir-level pruning probe behind
-    * partition-scoped patching. The probe is a broadcast-semi-join scan
-    * tagged with input_file_name (parquet column pruning reads only the
-    * key columns; bloom filters and min/max stats skip row groups), and
-    * only the distinct matching FILE paths are collected — bounded by the
-    * table's file count, not its rows.
+  /** The dir-level pruning probe behind partition-scoped patching: which
+    * of the table's data dirs hold a row whose key columns equal one of
+    * `keys`, and which of the FLAGGED keys (`keys` maps each key to its
+    * flag) those rows carry.
+    *
+    * The keys are held on the driver as rows typed like `keySchema` —
+    * the table's key columns, in order. Callers bound them to what the
+    * table can hold (see [[mayHold]]). The first key column prunes on the
+    * dirs' zone maps without touching their files: a dir is scanned only
+    * if some key lies inside its recorded [min, max], so a point patch
+    * against N range-labeled dirs scans the dirs that can hold it, not
+    * all N. The surviving dirs are scanned for their key columns only,
+    * read with `keySchema`'s declared types (no footer inference), and
+    * joined with the keys as a broadcast local relation. Each task sends
+    * back only its distinct matching files and flagged keys, so what
+    * reaches the driver is bounded by files plus keys, not by how many
+    * stored versions match. An empty key set, or a set every dir prunes
+    * away, starts no job.
+    *
+    * `found` holds each flagged key that some scanned row carries. Since
+    * every dir that can hold a key is scanned, a flagged key absent from
+    * `found` is absent from the table.
     */
   def dirsTouching(spark: SparkSession, table: String,
-      keyCols: Seq[String], keys: DataFrame): Seq[String] = {
-    import org.apache.spark.sql.functions.{broadcast, input_file_name, max, min}
+      keySchema: org.apache.spark.sql.types.StructType,
+      keys: Map[org.apache.spark.sql.Row, Boolean])
+      : VersionedCatalog.KeyProbe = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{broadcast, col, input_file_name}
+    import org.apache.spark.sql.types.{BooleanType, NumericType}
+    import VersionedCatalog.{Bounded, Empty}
+    val none = VersionedCatalog.KeyProbe(Nil, Set.empty)
     val allDirs = current._2.getOrElse(table, Nil)
-    if (allDirs.isEmpty) return Nil
-    // zone-map pruning first: a dir whose recorded [min,max] for a probe
-    // column cannot overlap the probe keys' bounds is skipped without
-    // touching its files — so a point patch against a table of N
-    // range-labeled dirs scans O(overlapping) dirs, not O(N). Only
-    // applies when the probe column is numeric AND some dir actually has
-    // bounds for it; otherwise skip the extra bounds action entirely.
+    if (allDirs.isEmpty || keys.isEmpty) return none
+    val keyCols = keySchema.fieldNames.toSeq
     val probeCol = keyCols.head
-    val zms = allDirs.map(d => d -> zoneMap(d)).toMap
-    val canPrune =
-      keys.schema(probeCol).dataType
-        .isInstanceOf[org.apache.spark.sql.types.NumericType] &&
-        zms.values.exists(_.contains(probeCol))
-    val dirs =
-      if (!canPrune) allDirs
-      else {
-        val boundsRow = keys
-          .agg(min(org.apache.spark.sql.functions.col(probeCol)),
-            max(org.apache.spark.sql.functions.col(probeCol))).head()
-        if (boundsRow.isNullAt(0)) return Nil // no probe keys at all
-        val (pLo, pHi) = (BigDecimal(boundsRow.get(0).toString),
-          BigDecimal(boundsRow.get(1).toString))
-        allDirs.filter { d =>
-          zms(d).get(probeCol) match {
-            case Some((lo, hi)) => hi >= pLo && lo <= pHi
-            case None => true // no zone map: cannot prune, must scan
-          }
-        }
+    lazy val sorted = keys.keysIterator
+      .map(k => BigDecimal(k.get(0).toString)).toArray.sorted
+    val dirs = allDirs.filter { d =>
+      zone(d, probeCol) match {
+        case Empty => false
+        case Bounded(lo, hi)
+            if keySchema(probeCol).dataType.isInstanceOf[NumericType] =>
+          val i = sorted.search(lo).insertionPoint
+          i < sorted.length && sorted(i) <= hi
+        case _ => true // cannot prune, must scan
       }
-    if (dirs.isEmpty) return Nil
+    }
+    if (dirs.isEmpty) return none
+    val probe = spark.createDataFrame(
+      keys.toSeq.map { case (k, flag) => Row.fromSeq(k.toSeq :+ flag) }.asJava,
+      keySchema.add("_flag", BooleanType, nullable = false))
     // per-dir scans (layout dirs are hive-partitioned, plain dirs aren't);
     // only the key columns survive, so mixed layouts union cleanly
-    val matches = dirs.map { d =>
-      spark.read.parquet(d)
-        .select(keyCols.map(org.apache.spark.sql.functions.col) :+
-          input_file_name().as("_file"): _*)
+    val perTask = dirs.map { d =>
+      spark.read.schema(keySchema).parquet(d)
+        .select(keyCols.map(col) :+ input_file_name().as("_file"): _*)
     }.reduce(_ unionByName _)
-      .join(broadcast(keys.select(
-        keyCols.map(org.apache.spark.sql.functions.col): _*).distinct()),
-        keyCols.toSeq, "left_semi")
-      .select("_file").distinct()
-      .collect().map(r => new java.net.URI(r.getString(0)).getPath)
-    dirs.filter { d =>
+      .join(broadcast(probe), keyCols, "inner")
+      .select(col("_file") +: col("_flag") +: keyCols.map(col): _*)
+      .rdd.mapPartitions(hits => Iterator.single(
+        VersionedCatalog.probeSummary(hits)))
+      .collect()
+    val files = perTask.iterator.flatMap(_._1).toSet
+      .map((f: String) => new java.net.URI(f).getPath)
+    VersionedCatalog.KeyProbe(dirs.filter { d =>
       val abs = Paths.get(d).toAbsolutePath.toString
-      matches.exists(f => f.startsWith(abs + "/"))
-    }
+      files.exists(f => f.startsWith(abs + "/"))
+    }, perTask.iterator.flatMap(_._2).toSet)
   }
 
   /** Compaction: rewrite a table's accumulated append dirs into one
@@ -965,6 +1006,37 @@ object VersionedCatalog {
 
   /** Sidecar file recording a dir's per-column [min,max] zone map. */
   val ZoneMapFile = "_RANGE.json"
+
+  /** What [[VersionedCatalog.dirsTouching]] found: the dirs holding a
+    * probed key, and the flagged keys that some row of those dirs carries.
+    */
+  final case class KeyProbe(dirs: Seq[String],
+      found: Set[org.apache.spark.sql.Row])
+
+  /** One task's share of a [[VersionedCatalog.dirsTouching]] scan: the
+    * distinct files among `hits` (rows of file, flag, key columns) and
+    * the distinct flagged keys.
+    */
+  private[catalog] def probeSummary(hits: Iterator[org.apache.spark.sql.Row])
+      : (Set[String], Set[org.apache.spark.sql.Row]) = {
+    val files = Set.newBuilder[String]
+    val found = Set.newBuilder[org.apache.spark.sql.Row]
+    hits.foreach { r =>
+      files += r.getString(0)
+      if (r.getBoolean(1))
+        found += org.apache.spark.sql.Row.fromSeq(r.toSeq.drop(2))
+    }
+    (files.result(), found.result())
+  }
+
+  /** A dir's zone map on one column: the dir holds no rows, or its
+    * values lie in [lo, hi], or the map cannot tell.
+    */
+  private[catalog] sealed trait Zone
+  private[catalog] case object Empty extends Zone
+  private[catalog] case object Unbounded extends Zone
+  private[catalog] final case class Bounded(lo: BigDecimal, hi: BigDecimal)
+      extends Zone
 
   /** Default zone-map columns: the id columns the scoped-patch probe
     * filters on. Chunked ingest assigns ids in ranges, so per-dir bounds

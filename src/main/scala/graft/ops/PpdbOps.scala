@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.schema.{PpdbSchema, UpdateRecord}
 
@@ -21,17 +21,24 @@ object PpdbOps {
 
   // ---------------------------------------------------------------- validity
 
-  /** Close open validity intervals: for DiaObject rows whose diaObjectId is
-    * in `scopeIds`, set validityEndMjdTai of open rows to the next row's
-    * validityStartMjdTai where one exists (LEAD window, semi-join-scoped —
-    * fill_diaobject_validity_end.sql:16-31). Rows outside the scope pass
-    * through untouched, preserving existing closed intervals (gap
-    * preservation).
+  /** Append `incoming` DiaObject rows to `base` and close open validity
+    * intervals: every incoming row, and every base row whose diaObjectId
+    * is in `baseIds`, gets validityEndMjdTai of an open row set to the
+    * next row's validityStartMjdTai where one exists (LEAD window —
+    * fill_diaobject_validity_end.sql:16-31). Other base rows pass through
+    * untouched, preserving existing closed intervals (gap preservation).
+    *
+    * `baseIds` must cover the incoming ids that `base` holds; ids `base`
+    * does not hold are harmless. So a caller need not hold every incoming
+    * id, only those the base can hold. It feeds a broadcast semi- and
+    * anti-join, so it may repeat ids: no distinct (and no shuffle).
     */
-  def fillValidityEnd(target: DataFrame, scopeIds: DataFrame): DataFrame = {
-    val ids = broadcast(scopeIds.select("diaObjectId").distinct())
-    val scoped = target.join(ids, Seq("diaObjectId"), "left_semi")
-    val rest = target.join(ids, Seq("diaObjectId"), "left_anti")
+  def fillValidityEnd(base: DataFrame, incoming: DataFrame,
+      baseIds: DataFrame): DataFrame = {
+    val ids = broadcast(baseIds.select("diaObjectId"))
+    val scoped = base.join(ids, Seq("diaObjectId"), "left_semi")
+      .unionByName(incoming)
+    val rest = base.join(ids, Seq("diaObjectId"), "left_anti")
     val w = Window.partitionBy("diaObjectId").orderBy("validityStartMjdTai")
     val filled = scoped
       .withColumn("_next", lead(col("validityStartMjdTai"), 1).over(w))
@@ -139,17 +146,85 @@ object PpdbOps {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Distinct record keys touched by a table's latest-only updates, typed
-    * to the target table's key columns — the scope used for dir-level
-    * pruning and scoped merges.
+  /** The target of one latest-only update row: table, record key (the
+    * target's key columns in order) and patched field.
     */
-  def patchKeys(latest: DataFrame, spec: MergeSpec,
-      target: DataFrame): DataFrame =
-    latest.where(col("table_name") === spec.table)
-      .select(spec.keys.zipWithIndex.map { case (k, i) =>
-        col("record_id").getItem(i).cast(target.schema(k).dataType).as(k)
-      }: _*)
-      .distinct()
+  final case class UpdateKey(table: String, recordId: Seq[Long],
+      field: String)
+
+  /** The targets of `latest`'s update rows, read to the driver in one
+    * collect. Update batches are chunk-sized, so the set is bounded.
+    */
+  def updateKeys(latest: DataFrame): Seq[UpdateKey] =
+    latest.select("table_name", "record_id", "field_name").collect().toSeq
+      .map(r => UpdateKey(r.getString(0), r.getSeq[Long](1), r.getString(2)))
+
+  /** The key columns of `spec.table` as `target` declares them, in key
+    * order — the row type of every driver-held key of that table.
+    */
+  def keySchema(spec: MergeSpec, target: StructType): StructType =
+    StructType(spec.keys.map(target(_)))
+
+  /** The keys of `rows` that a scoped merge into a table needs on the
+    * driver, typed like `keySchema` (which may extend the table's key
+    * columns): those whose first column `mayExist` admits — the keys the
+    * table's dirs can hold, for the dir probe and the same-key
+    * replacement — and those sharing their first column with a key of
+    * `patch`, for J6. The other keys are new to the table and neither
+    * step needs them. One filtered scan, no shuffle; no job when neither
+    * condition can hold.
+    */
+  def neededKeys(rows: DataFrame, keySchema: StructType,
+      mayExist: Option[Column], patch: Map[Row, Boolean]): Seq[Row] = {
+    val first = col(keySchema.head.name)
+    val patched =
+      if (patch.isEmpty) None
+      else Some(first.isin(patch.keysIterator.map(_.get(0)).toSeq.distinct: _*))
+    (mayExist ++ patched).reduceOption(_ || _).fold(Seq.empty[Row]) { cond =>
+      rows.select(keySchema.fields.toSeq.map(f =>
+          col(f.name).cast(f.dataType).as(f.name)): _*)
+        .where(cond).collect().toSeq
+    }
+  }
+
+  /** Driver-held rows as a DataFrame: a local relation, which the scope
+    * joins that use it broadcast without a shuffle.
+    */
+  def localRows(spark: SparkSession, rows: Seq[Row],
+      schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.List.of(rows: _*), schema)
+
+  /** The record keys `updates` patch in `spec.table`, as rows typed like
+    * `keySchema` — the driver-side scope used for dir-level pruning and
+    * scoped merges. A key maps to true when one of its updates sets a
+    * field the merge applies, i.e. when J6 requires the key to exist.
+    *
+    * Record ids are longs; a narrower key column (`detector` is a short)
+    * takes them through the same cast, in the session's ANSI mode, that
+    * a query's `cast` would use, so an id out of the column's range fails
+    * the batch with Spark's own overflow error instead of wrapping.
+    */
+  def patchKeys(spark: SparkSession, updates: Seq[UpdateKey],
+      spec: MergeSpec, keySchema: StructType): Map[Row, Boolean] = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
+    val mode = EvalMode.fromBoolean(
+      spark.conf.get("spark.sql.ansi.enabled").toBoolean)
+    val typers: Seq[Long => Any] = keySchema.fields.toSeq.map(_.dataType).map {
+      case LongType => (v: Long) => v
+      case t =>
+        val toScala = CatalystTypeConverters.createToScalaConverter(t)
+        (v: Long) => toScala(Cast(Literal(v), t, None, mode).eval())
+    }
+    val applied = spec.fields.map(_._1).toSet
+    updates.filter(_.table == spec.table)
+      .groupMapReduce { u =>
+        require(u.recordId.size == typers.size, s"${spec.table} update " +
+          s"record id ${u.recordId.mkString("[", ",", "]")} does not have " +
+          s"the ${typers.size} key columns ${spec.keys.mkString(", ")}")
+        Row.fromSeq(u.recordId.zip(typers).map { case (v, f) => f(v) })
+      }(u => applied(u.field))(_ || _)
+  }
 
   /** Hand-rolled MERGE (J4/J5): broadcast the patch, left-outer join on
     * the (composite) key, rewrite each patchable field with
@@ -179,16 +254,18 @@ object PpdbOps {
     joined.select(outCols.toSeq: _*)
   }
 
-  /** J6 validation: every latest-only update row must hit an existing
-    * target row; returns the dangling patch keys (callers raise on
-    * non-empty — P/sql/_ppdb_sql.py:303-314).
+  /** J6 validation, settled on the driver: every key an applied update
+    * targets must exist. The target rows of a scoped merge are the rows
+    * of the dirs the probe opened plus the batch's own staged rows, so a
+    * required key of `patch` (see [[patchKeys]]) dangles when the probe
+    * did not find it and the batch does not stage it. Callers raise on a
+    * non-empty result (P/sql/_ppdb_sql.py:303-314).
     */
-  def danglingUpdates(target: DataFrame, patch: DataFrame,
-      spec: MergeSpec): DataFrame = {
-    val t = target.select(spec.keys.map(col): _*)
-    patch.select(spec.keys.map(col): _*)
-      .join(t, spec.keys.toSeq, "left_anti")
-  }
+  def danglingKeys(patch: Map[Row, Boolean], found: Set[Row],
+      staged: Set[Row]): Seq[Row] =
+    patch.iterator.collect {
+      case (k, true) if !found(k) && !staged(k) => k
+    }.toSeq
 
   /** Apply a chunk's updates to the three data tables: LWW collapse, then
     * per-table patch build + merge. Returns patched tables keyed by name.

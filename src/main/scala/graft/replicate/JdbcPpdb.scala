@@ -227,8 +227,9 @@ final class PpdbJdbc(spark: SparkSession, val url: String)
   /** Apply one table's collapsed patch as batched UPDATEs. Rows are
     * grouped by their present-field signature (one PreparedStatement per
     * signature); an UPDATE matching zero rows is a dangling update (J6)
-    * and aborts the transaction, exactly like the Parquet backends'
-    * requireNoDangling — but here the rollback also un-inserts the chunk.
+    * and aborts the transaction, exactly like the Parquet backends' J6
+    * check on the driver ([[PpdbOps.danglingKeys]]) — but here the
+    * rollback also un-inserts the chunk.
     */
   private def applyPatch(conn: Connection, chunkId: Long, table: String,
       spec: PpdbOps.MergeSpec, rows: Array[Row], schema: StructType): Unit = {
@@ -246,7 +247,7 @@ final class PpdbJdbc(spark: SparkSession, val url: String)
     rows.groupBy(presentFields).foreach { case (fields, group) =>
       if (fields.isEmpty) {
         // No effective SET (e.g. a requireValueNonNull field patched to
-        // NULL) — J6 still validates the key exists, like danglingUpdates.
+        // NULL) — J6 still validates the key exists, like danglingKeys.
         val where = spec.keys.map(k => s""""$k" = ?""").mkString(" AND ")
         val ps = conn.prepareStatement(
           s"""SELECT 1 FROM "$table" WHERE $where""")

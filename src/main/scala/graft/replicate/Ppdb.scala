@@ -199,9 +199,11 @@ final class PpdbSpark(spark: SparkSession, val catalog: VersionedCatalog)
     * ingested as APPEND deltas — one new directory per chunk, zero
     * rewrite — and when an update record patches them, only the
     * DIRECTORIES containing patched keys are rewritten
-    * ([[VersionedCatalog.dirsTouching]]). The DiaObject validity fill is
-    * likewise scoped to the dirs holding this chunk's object ids, so the
-    * per-chunk cost is O(chunk + touched dirs), never O(table).
+    * ([[VersionedCatalog.dirsTouching]], probed with the chunk's keys
+    * held on the driver; the same probe settles J6). The DiaObject
+    * validity fill is likewise scoped to the dirs holding this chunk's
+    * object ids, so the per-chunk cost is O(chunk + touched dirs), never
+    * O(table).
     */
   def store(chunk: ChunkData, update: Boolean): Unit = {
     val known = catalog.read(spark, "PpdbReplicaChunk")
@@ -225,84 +227,97 @@ final class PpdbSpark(spark: SparkSession, val catalog: VersionedCatalog)
       else Some(PpdbOps.latestOnly(
         PpdbOps.expandUpdates(spark, chunk.updates)).cache())
     try {
-    val touched: Set[String] = latestOpt.fold(Set.empty[String]) {
-      _.select("table_name").distinct().collect().map(_.getString(0)).toSet
-    }
+    // the update targets come to the driver in one collect; they also
+    // say which tables the chunk touches
+    val updateKeys = latestOpt.fold(Seq.empty[PpdbOps.UpdateKey])(
+      PpdbOps.updateKeys)
+    val touched = updateKeys.map(_.table).toSet
 
     // 1. DiaObject: insert new versions and close superseded intervals
     //    (LEAD fill, W2+J3) — scoped to the dirs holding this chunk's
     //    object ids or patched object ids; other dirs carry over as-is
     val objSpec = PpdbOps.mergeSpecs("DiaObject")
-    val objPatch = latestOpt.filter(_ => touched("DiaObject"))
-      .map(l => PpdbOps.buildPatch(l, objSpec))
-    val objScope = chunk.diaObjects.select("diaObjectId")
-      .unionByName(latestOpt.fold(emptyDf(objects.select("diaObjectId").schema))(
-        l => PpdbOps.patchKeys(l, objSpec, objects)))
-      .distinct()
-    val objAffected =
-      catalog.dirsTouching(spark, "DiaObject", Seq("diaObjectId"), objScope)
+    val objKeys = PpdbOps.keySchema(objSpec, objects.schema)
+    val pkSchema = objKeys.add(objects.schema("validityStartMjdTai"))
+    val objPatch = PpdbOps.patchKeys(spark, updateKeys, objSpec, objKeys)
+    // the chunk's PKs that the table's dirs can hold or that share an id
+    // with a patch key; the others are new objects
+    val chunkPks = PpdbOps.neededKeys(chunk.diaObjects, pkSchema,
+      catalog.mayHold("DiaObject", objKeys.head), objPatch)
+    val chunkIds = chunkPks.map(r => Row(r.get(0))).toSet
+    val objProbe = catalog.dirsTouching(spark, "DiaObject", objKeys,
+      chunkIds.map(_ -> false).toMap ++ objPatch)
     val objBase0 =
-      if (objAffected.isEmpty) emptyDf(objects.schema)
-      else catalog.readDirs(spark, objAffected, objects.columns.toSeq)
+      if (objProbe.dirs.isEmpty) emptyDf(objects.schema)
+      else catalog.readDirs(spark, objProbe.dirs, objects.columns.toSeq)
     // upsert mode: incoming rows REPLACE same-PK versions
     val objBase =
       if (!update) objBase0
       else objBase0.join(
-        chunk.diaObjects
-          .select(col("diaObjectId"), col("validityStartMjdTai")).distinct(),
+        broadcast(PpdbOps.localRows(spark, chunkPks, pkSchema)),
         Seq("diaObjectId", "validityStartMjdTai"), "left_anti")
-    val objectsScoped = objBase.unionByName(
-      chunk.diaObjects.select(objects.columns.map(col).toSeq: _*))
     val filled = graft.Metrics.time("update_validity_time",
         "table" -> "DiaObject") {
-      if (chunk.diaObjects.isEmpty) objectsScoped
-      else PpdbOps.fillValidityEnd(objectsScoped, chunk.diaObjects)
+      PpdbOps.fillValidityEnd(objBase,
+        chunk.diaObjects.select(objects.columns.map(col).toSeq: _*),
+        PpdbOps.localRows(spark, chunkIds.toSeq, objKeys))
     }
 
     val srcDelta = chunk.diaSources.select(sources.columns.map(col).toSeq: _*)
     val fsrcDelta = chunk.diaForcedSources.select(forced.columns.map(col).toSeq: _*)
 
     // 2. ordered update records (LWW collapse + per-table patch merge,
-    //    J4/J5) with existence validation (J6). Validation runs against
-    //    the scoped rows: any existing row with a patched key lives in an
-    //    affected dir (the dir probe includes the patch keys), so
-    //    "missing from scope" == "missing from table".
+    //    J4/J5) with existence validation (J6), settled on the driver:
+    //    any existing row with a patched key lives in a dir the probe
+    //    scanned, so a patched key neither found there nor carried by the
+    //    chunk is missing from the table
+    def requireFound(table: String, patch: Map[Row, Boolean],
+        found: Set[Row], staged: Set[Row]): Unit =
+      PpdbOps.danglingKeys(patch, found, staged).headOption.foreach { k =>
+        throw new IllegalStateException(
+          s"chunk ${chunk.chunkId}: update for missing $table row " +
+            k.toString)
+      }
     def scopedFact(t: String, full: DataFrame,
         delta: DataFrame): TableDelta = {
       if (!touched(t) && !update)
         return TableDelta(appends = Seq(delta -> label))
       val spec = PpdbOps.mergeSpecs(t)
+      val keys = PpdbOps.keySchema(spec, full.schema)
+      val patch = PpdbOps.patchKeys(spark, updateKeys, spec, keys)
+      // the chunk's own keys that J6 may look for and, in upsert mode,
+      // those the table's dirs can hold: the rows the incoming delta's
+      // PKs replace (spec.keys IS the fact-table PK)
+      val deltaKeys = PpdbOps.neededKeys(delta, keys,
+        if (update) catalog.mayHold(t, keys.head) else None, patch)
       // dirs to open: those holding patched keys and, in upsert mode,
-      // those holding rows the incoming delta's PKs replace (spec.keys
-      // IS the fact-table PK)
-      val deltaKeys = delta.select(spec.keys.map(col): _*).distinct()
-      val keys = (
-        (if (touched(t))
-          Seq(PpdbOps.patchKeys(latestOpt.get, spec, full)) else Nil) ++
-        (if (update) Seq(deltaKeys) else Nil))
-        .reduce(_.unionByName(_)).distinct()
-      val affected = catalog.dirsTouching(spark, t, spec.keys, keys)
+      // those holding rows the incoming delta replaces
+      val probed = catalog.dirsTouching(spark, t, keys,
+        (if (update) deltaKeys.map(_ -> false).toMap
+         else Map.empty[Row, Boolean]) ++ patch)
+      requireFound(t, patch, probed.found, deltaKeys.toSet)
       val base0 =
-        if (affected.isEmpty) emptyDf(full.schema)
-        else catalog.readDirs(spark, affected, full.columns.toSeq)
+        if (probed.dirs.isEmpty) emptyDf(full.schema)
+        else catalog.readDirs(spark, probed.dirs, full.columns.toSeq)
       val base =
         if (!update) base0
-        else base0.join(deltaKeys, spec.keys, "left_anti")
+        else base0.join(broadcast(PpdbOps.localRows(spark, deltaKeys, keys)),
+          spec.keys,
+          "left_anti")
       val rows = base.unionByName(delta)
-      if (touched(t)) {
-        val patch = PpdbOps.buildPatch(latestOpt.get, spec)
-        requireNoDangling(t, chunk.chunkId, rows, patch, spec)
-        val patched = PpdbOps.mergePatch(rows, patch, spec)
-        TableDelta(dropDirs = affected.toSet, appends = Seq(patched -> label))
-      } else TableDelta(dropDirs = affected.toSet, appends = Seq(rows -> label))
+      val patched =
+        if (patch.isEmpty) rows
+        else PpdbOps.mergePatch(rows, PpdbOps.buildPatch(latestOpt.get, spec),
+          spec)
+      TableDelta(dropDirs = probed.dirs.toSet, appends = Seq(patched -> label))
     }
     val objDelta = {
-      objPatch.foreach { p =>
-        requireNoDangling("DiaObject", chunk.chunkId, filled, p, objSpec)
-      }
+      requireFound("DiaObject", objPatch, objProbe.found, chunkIds)
       val objPatched =
-        objPatch.fold(filled)(p => PpdbOps.mergePatch(filled, p, objSpec))
-      TableDelta(dropDirs = objAffected.toSet,
+        if (objPatch.isEmpty) filled
+        else PpdbOps.mergePatch(filled,
+          PpdbOps.buildPatch(latestOpt.get, objSpec), objSpec)
+      TableDelta(dropDirs = objProbe.dirs.toSet,
         appends = Seq(objPatched -> label))
     }
 
@@ -333,18 +348,9 @@ final class PpdbSpark(spark: SparkSession, val catalog: VersionedCatalog)
     }
     ()
     // the patch cache is only read by the writes above; drop it even when
-    // requireNoDangling/commitAll throws, so storage memory doesn't
-    // accumulate across retried store() calls
+    // J6 or commitAll throws, so storage memory doesn't accumulate across
+    // retried store() calls
     } finally latestOpt.foreach(_.unpersist())
     }
-  }
-
-  private def requireNoDangling(table: String, chunkId: Long,
-      target: DataFrame, patch: DataFrame,
-      spec: PpdbOps.MergeSpec): Unit = {
-    val bad = PpdbOps.danglingUpdates(target, patch, spec).limit(1).collect()
-    if (bad.nonEmpty)
-      throw new IllegalStateException(
-        s"chunk $chunkId: update for missing $table row " + bad.head.toString)
   }
 }

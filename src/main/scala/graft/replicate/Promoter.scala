@@ -2,6 +2,7 @@ package graft.replicate
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.catalog.{MetadataTable, TableDelta, VersionedCatalog}
 import graft.functions.SpatialCell
@@ -22,12 +23,25 @@ import graft.schema.{PpdbSchema, UpdateRecord, VersionTuple}
   *     delete, status=promoted — all published as ONE atomic commit
   *     (chunk_promoter.py:117-348).
   *
+  * Promote's scope is held on the driver: the batch's update targets
+  * come in one collect, and per table one filtered scan (no shuffle)
+  * collects the staged keys that the table's dirs can hold, per their
+  * zone maps, or that share an id with an update target, typed like the
+  * target key columns. Staged keys new to a table stay off the driver,
+  * so its memory follows the batch's overlap with stored data, not the
+  * batch size. One dir probe per table takes those keys, and also
+  * reports which patched keys it found, so the J6 check (an update must
+  * target an existing row) is a set difference on the driver instead of
+  * a query. The rewrite plans' scope joins use the same keys as
+  * broadcast local relations.
+  *
   * Concurrency: the Spark jobs of one step that do not depend on each
   * other run at the same time ([[graft.Concurrently]]) — export's three
-  * table writes, promote's four per-table chains (dir probe, base read,
-  * J6 validation) and every write of a commit. Each step still waits
-  * for all of its jobs before the next begins, errors surface in table
-  * order, and the catalog pointer moves on the caller's thread.
+  * table writes, promote's per-table chains (staged-key collect, dir
+  * probe, base read; the DiaObject chain probes the snapshot too) and
+  * every write of a commit. Each step still waits for all of its jobs
+  * before the next begins, errors surface in table order, and J6 and the
+  * catalog pointer move run on the caller's thread.
   *
   * Scale notes: staging tables are partitioned by apdb_replica_chunk so
   * the staged-row delete (S15) is a partition drop, not a rewrite; the
@@ -36,6 +50,7 @@ import graft.schema.{PpdbSchema, UpdateRecord, VersionTuple}
   */
 final class Promoter(spark: SparkSession, val catalog: VersionedCatalog,
     exportRoot: String) {
+  import Promoter.Scoped
 
   val schemaVersion = "graft-ppdb:0.1.0"
 
@@ -249,10 +264,10 @@ final class Promoter(spark: SparkSession, val catalog: VersionedCatalog,
     * Partition-scoped rewrites: the internal tables are unions of
     * immutable directories, and promotion only rewrites the directories
     * that actually hold a staged or patched key (located with the
-    * catalog's pruned [[VersionedCatalog.dirsTouching]] probe). Every
-    * other directory's bytes carry over untouched — so one stray update
-    * record against a 100 TB fact table costs a per-dir rewrite, not a
-    * table rewrite.
+    * catalog's pruned [[VersionedCatalog.dirsTouching]] probe over the
+    * driver-held keys). Every other directory's bytes carry over
+    * untouched — so one stray update record against a 100 TB fact table
+    * costs a per-dir rewrite, not a table rewrite.
     */
   def promote(): Seq[Long] = promote(None)
 
@@ -279,92 +294,106 @@ final class Promoter(spark: SparkSession, val catalog: VersionedCatalog,
     val batchLabel = s"promo${ids.head}_${ids.last}"
     val batchTag = "batch" -> batchLabel
 
-    // T6/W3: latest-only update patches for the batch
+    // T6/W3: latest-only update patches for the batch. The cache feeds
+    // the patch merges at commit time; its targets come to the driver in
+    // one collect
     val updates = catalog.read(spark, "staging.updates").where(inChunks)
     val latest = PpdbOps.latestOnly(updates).cache()
     try {
-    val touched = graft.Metrics.time("promote_latest_updates_time", batchTag) {
-      latest.select("table_name").distinct()
-        .collect().map(_.getString(0)).toSet
-    }
+    val updateKeys = graft.Metrics.time("promote_latest_updates_time",
+      batchTag)(PpdbOps.updateKeys(latest))
 
     // J9: staged rows for the batch, realigned to internal schema
     val stagedObj = catalog.read(spark, "staging.DiaObject").where(inChunks)
       .drop("apdb_replica_chunk")
     val internalObj = catalog.read(spark, "internal.DiaObject")
-
-    // DiaObject: W2/J3 validity fill + A1/J4 patch, scoped to the dirs
-    // holding a staged or patched object id
     val objSpec = PpdbOps.mergeSpecs("DiaObject")
-    val objPatch =
-      if (touched("DiaObject")) Some(PpdbOps.buildPatch(latest, objSpec))
-      else None
-    val objScope = stagedObj.select("diaObjectId")
-      .unionByName(PpdbOps.patchKeys(latest, objSpec, internalObj))
-      .distinct()
-    def probe(table: String)(body: => Seq[String]): Seq[String] =
-      graft.Metrics.time("promote_dir_probe_time", batchTag,
-        "table" -> table)(body)
+    val objKeys = PpdbOps.keySchema(objSpec, internalObj.schema)
 
-    // Each output table's chain (dir probe, then base read, then J6
-    // validation) yields the dirs it replaces and the rows replacing
-    // them. The chains share no state, so they run concurrently; nothing
-    // commits until all have finished, and a failure surfaces as the
-    // first in chain order (DiaObject, DiaObjectLast, DiaSource,
-    // DiaForcedSource), whatever the thread timing.
-    val objectChain = () => {
-      val objAffected = probe("internal.DiaObject") {
-        catalog.dirsTouching(spark, "internal.DiaObject",
-          Seq("diaObjectId"), objScope)
+    def probe(table: String, keySchema: StructType, keys: Map[Row, Boolean]) =
+      graft.Metrics.time("promote_dir_probe_time", batchTag,
+          "table" -> table) {
+        catalog.dirsTouching(spark, table, keySchema, keys)
       }
+
+    // Each output table's chain reads the staged keys it needs to the
+    // driver (one filtered scan, no shuffle): those the table's dirs can
+    // hold per their zone maps, and those sharing an id with a patch key.
+    // The rest are new to the table, so neither the probe, the same-key
+    // replacement nor J6 needs them, and a large batch of new rows costs
+    // the driver nothing. The chain then probes the dirs holding a needed
+    // or patched key and builds the plan of the rows replacing them. The
+    // chains share no state, so they run concurrently; nothing commits
+    // until all have finished, and a failure surfaces as the first in
+    // chain order (DiaObject, DiaSource, DiaForcedSource), whatever the
+    // thread timing. Every scope join below uses the driver-held keys as
+    // a broadcast local relation.
+    val snapTable = "public.DiaObjectLast"
+    val objectChain = () => {
+      val idField = objKeys.head
+      val pkSchema = objKeys.add(internalObj.schema("validityStartMjdTai"))
+      val patch = PpdbOps.patchKeys(spark, updateKeys, objSpec, objKeys)
+      // the snapshot (S14) shares the ids: a key either table can hold
+      val mayExist = (catalog.mayHold("internal.DiaObject", idField) ++
+        catalog.mayHold(snapTable, idField)).reduceOption(_ || _)
+      val stagedPks = PpdbOps.neededKeys(stagedObj, pkSchema, mayExist, patch)
+      val staged = stagedPks.map(r => Row(r.get(0))).toSet
+      val scope = staged.map(_ -> false).toMap ++ patch
+      // the public snapshot is scoped like the source table: only its
+      // dirs holding a scoped object id are rewritten
+      val Seq(objProbe, snapProbe) = graft.Concurrently.all(Seq(
+        () => probe("internal.DiaObject", objKeys, scope),
+        () => probe(snapTable, objKeys, scope)))
+      val stagedIds = PpdbOps.localRows(spark, staged.toSeq, objKeys)
+      val scopeIds = PpdbOps.localRows(spark, scope.keys.toSeq, objKeys)
+
+      // DiaObject: W2/J3 validity fill + A1/J4 patch over the probed dirs
       val objBase0 =
-        if (objAffected.isEmpty) emptyDf(internalObj.schema)
-        else catalog.readDirs(spark, objAffected, internalObj.columns.toSeq)
+        if (objProbe.dirs.isEmpty) emptyDf(internalObj.schema)
+        else catalog.readDirs(spark, objProbe.dirs, internalObj.columns.toSeq)
       // MERGE semantics (the reference's WHEN MATCHED UPDATE): staged rows
       // REPLACE internal rows sharing their primary key, so a chunk
       // re-exported in update mode and promoted again lands exactly once.
       // Normal-flow PKs are new — the anti-join drops nothing. The dir
       // probe above already covers same-PK rows (same diaObjectId).
       val objBase = objBase0.join(
-        stagedObj.select(col("diaObjectId"), col("validityStartMjdTai"))
-          .distinct(),
+        broadcast(PpdbOps.localRows(spark, stagedPks, pkSchema)),
         Seq("diaObjectId", "validityStartMjdTai"), "left_anti")
-      val unionObj = objBase.unionByName(
-        stagedObj.select(internalObj.columns.map(col).toSeq: _*))
-      val filled =
-        PpdbOps.fillValidityEnd(unionObj, stagedObj.select("diaObjectId"))
-      // J6: an update record targeting a row that was never promoted must
-      // ABORT the batch (mergePatch's left-outer join would silently drop
-      // it) — same contract the direct-store path enforces. The scoped
-      // rows are a sound validation target: any existing row with a
-      // patched key lives in an affected dir (the dir probes include the
-      // patch keys), so "missing from scope" == "missing from table".
-      objPatch.foreach(p => requireNoDangling("DiaObject", filled, p, objSpec))
-      (objAffected, Some(
-        objPatch.fold(filled)(p => PpdbOps.mergePatch(filled, p, objSpec))))
-    }
+      val stagedRows = stagedObj.select(internalObj.columns.map(col).toSeq: _*)
+      def patched(df: DataFrame) =
+        if (patch.isEmpty) df
+        else PpdbOps.mergePatch(df, PpdbOps.buildPatch(latest, objSpec),
+          objSpec)
+      val objRows = patched(
+        PpdbOps.fillValidityEnd(objBase, stagedRows, stagedIds))
 
-    // S14: the public snapshot is scoped the same way as the source
-    // table — only the snapshot dirs holding a scoped object id are
-    // rewritten. Its chain is the probe alone: its rows derive from the
-    // DiaObject chain's, so they are built once both have finished.
-    val snapTable = "public.DiaObjectLast"
-    val snapshotChain = () => {
-      val snapAffected =
-        if (!catalog.exists(snapTable)) Nil
-        else probe(snapTable) {
-          catalog.dirsTouching(spark, snapTable, Seq("diaObjectId"), objScope)
-        }
-      (snapAffected, Option.empty[DataFrame])
+      // the snapshot rows: the snapshot dirs' out-of-scope rows carry
+      // over, the in-scope rows are replaced by the scope's new open
+      // intervals (an object whose interval closed simply disappears).
+      // snapNew holds the SCOPE's rows only — every staged row and the
+      // base rows of a staged or patched id: the probed dirs also carry
+      // out-of-scope rows that merely shared a dir with scoped ids, and
+      // those keep their existing snapshot rows via snapBase.
+      val snapNew = PpdbOps.latestSnapshot(patched(PpdbOps.fillValidityEnd(
+        objBase.join(broadcast(scopeIds), Seq("diaObjectId"), "left_semi"),
+        stagedRows, stagedIds)))
+      val snapBase =
+        if (snapProbe.dirs.isEmpty) emptyDf(snapNew.schema)
+        else catalog.readDirs(spark, snapProbe.dirs, snapNew.columns.toSeq)
+          .join(broadcast(scopeIds), Seq("diaObjectId"), "left_anti")
+      Seq(
+        Scoped("DiaObject", "internal.DiaObject", objProbe.dirs, objRows,
+          patch, objProbe.found, staged),
+        Scoped("DiaObjectLast", snapTable, snapProbe.dirs,
+          snapBase.unionByName(snapNew), Map.empty, Set.empty, Set.empty))
     }
 
     // fact tables: MERGE, not append — the dirs holding a row whose PK
     // the staged delta carries (a re-promoted update-mode chunk) or a
     // patched key are rewritten with same-PK rows replaced; everything
     // else is the plain append. In the normal flow delta PKs are new:
-    // the zone-map prune inside dirsTouching rejects every dir against
-    // the fresh id range DRIVER-side, `affected` is empty, and the
-    // append path costs one tiny bounds agg over the delta keys.
+    // their ids lie outside every dir's zone map, no staged key reaches
+    // the driver, and an untouched table is a plain append.
     def factChain(t: String) = () => {
       val name = s"internal.$t"
       val internal = catalog.read(spark, name)
@@ -372,55 +401,49 @@ final class Promoter(spark: SparkSession, val catalog: VersionedCatalog,
         .drop("apdb_replica_chunk")
         .select(internal.columns.map(col).toSeq: _*)
       val spec = PpdbOps.mergeSpecs(t)
-      val deltaKeys = delta.select(spec.keys.map(col): _*).distinct()
-      val keys = (Seq(deltaKeys) ++
-        (if (touched(t)) Seq(PpdbOps.patchKeys(latest, spec, internal))
-         else Nil)).reduce(_.unionByName(_)).distinct()
-      val affected =
-        probe(name)(catalog.dirsTouching(spark, name, spec.keys, keys))
-      if (affected.isEmpty && !touched(t)) (affected, Some(delta))
-      else {
-        val base0 =
-          if (affected.isEmpty) emptyDf(internal.schema)
-          else catalog.readDirs(spark, affected, internal.columns.toSeq)
-        val base = base0.join(deltaKeys, spec.keys, "left_anti")
-        val rows = base.unionByName(delta)
-        if (touched(t)) {
-          val patch = PpdbOps.buildPatch(latest, spec)
-          requireNoDangling(t, rows, patch, spec) // J6, as above
-          (affected, Some(PpdbOps.mergePatch(rows, patch, spec)))
-        } else (affected, Some(rows))
-      }
+      val keys = PpdbOps.keySchema(spec, internal.schema)
+      val patch = PpdbOps.patchKeys(spark, updateKeys, spec, keys)
+      val stagedKeys = PpdbOps.neededKeys(delta, keys,
+        catalog.mayHold(name, keys.head), patch)
+      val staged = stagedKeys.toSet
+      val probed = probe(name, keys, staged.map(_ -> false).toMap ++ patch)
+      val rows =
+        if (probed.dirs.isEmpty && patch.isEmpty) delta
+        else {
+          val base0 =
+            if (probed.dirs.isEmpty) emptyDf(internal.schema)
+            else catalog.readDirs(spark, probed.dirs, internal.columns.toSeq)
+          val merged = base0
+            .join(broadcast(PpdbOps.localRows(spark, stagedKeys, keys)),
+              spec.keys, "left_anti")
+            .unionByName(delta)
+          if (patch.isEmpty) merged
+          else PpdbOps.mergePatch(merged, PpdbOps.buildPatch(latest, spec),
+            spec)
+        }
+      Seq(Scoped(t, name, probed.dirs, rows, patch, probed.found, staged))
     }
 
-    val Seq((objAffected, objRows), (snapAffected, _),
-        (srcAffected, srcRows), (forcedAffected, forcedRows)) =
-      graft.Concurrently.all(Seq(objectChain, snapshotChain,
-        factChain("DiaSource"), factChain("DiaForcedSource")))
-    def replacing(affected: Seq[String], rows: Option[DataFrame]) =
-      TableDelta(dropDirs = affected.toSet,
-        appends = rows.map(_ -> batchLabel).toSeq)
-    val objPatched = objRows.get
+    val scoped = graft.Concurrently.all(Seq(objectChain,
+      factChain("DiaSource"), factChain("DiaForcedSource"))).flatten
 
-    // the snapshot rows: the snapshot dirs' out-of-scope rows carry over,
-    // the in-scope rows are replaced by the scope's new open intervals
-    // (an object whose interval closed simply disappears). snapNew is
-    // restricted to the SCOPE: objPatched also carries out-of-scope rows
-    // that merely shared a dir with scoped ids, and those keep their
-    // existing snapshot rows via snapBase.
-    val snapNew = PpdbOps.latestSnapshot(
-      objPatched.join(broadcast(objScope), Seq("diaObjectId"), "left_semi"))
-    val snapBase =
-      if (snapAffected.isEmpty) emptyDf(snapNew.schema)
-      else catalog.readDirs(spark, snapAffected, snapNew.columns.toSeq)
-        .join(broadcast(objScope), Seq("diaObjectId"), "left_anti")
-
-    val writes: Map[String, TableDelta] = Map(
-      "internal.DiaObject" -> replacing(objAffected, objRows),
-      snapTable -> replacing(snapAffected,
-        Some(snapBase.unionByName(snapNew))),
-      "internal.DiaSource" -> replacing(srcAffected, srcRows),
-      "internal.DiaForcedSource" -> replacing(forcedAffected, forcedRows))
+    // J6: an update record targeting a row that was never promoted must
+    // ABORT the batch (mergePatch's left-outer join would silently drop
+    // it) — same contract the direct-store path enforces. Settled on the
+    // driver from what the probes found, in table order; starts no job.
+    scoped.filter(_.patch.nonEmpty).foreach { s =>
+      graft.Metrics.time("promote_validate_time", "table" -> s.label) {
+        PpdbOps.danglingKeys(s.patch, s.found, s.staged).headOption
+          .foreach { k =>
+            throw new IllegalStateException(
+              s"promote: update for missing ${s.label} row " + k.toString)
+          }
+      }
+    }
+    val writes = scoped.map { s =>
+      s.table -> TableDelta(dropDirs = s.affected.toSet,
+        appends = Seq(s.rows -> batchLabel))
+    }.toMap
 
     // S15: staged-row delete = DIRECTORY DROP of the promoted chunks'
     // labeled append dirs (metadata-only, no rewrite)
@@ -434,10 +457,11 @@ final class Promoter(spark: SparkSession, val catalog: VersionedCatalog,
 
     // the commit is where the lazily-built merge/fill/patch plans
     // actually EXECUTE (parquet writes, one thread per table) — this
-    // timer is the whole rewrite cost. The other jobs promotion runs are
-    // the latest-updates collect, the probes and validations above, and
-    // one footer schema-inference job per spark.read.parquet without a
-    // schema (catalog reads, dirsTouching's and readDirs' per-dir scans)
+    // timer is the whole rewrite cost. Before it, promotion runs the
+    // latest-updates collect, at most one staged-key collect and one
+    // probe scan per table (plus the broadcast of its keys), and one
+    // footer schema-inference job per spark.read.parquet without a
+    // schema (catalog reads, readDirs' per-dir scans)
     graft.Metrics.time("promote_commit_time", batchTag) {
       catalog.commitAll(writes ++ stagingWrites ++ Map(
         "PpdbReplicaChunk" -> TableDelta(rewrite = Some(chunkTable))),
@@ -519,15 +543,6 @@ final class Promoter(spark: SparkSession, val catalog: VersionedCatalog,
 
   // ----------------------------------------------------------------- helpers
 
-  private def requireNoDangling(table: String, target: DataFrame,
-      patch: DataFrame, spec: PpdbOps.MergeSpec): Unit =
-      graft.Metrics.time("promote_validate_time", "table" -> table) {
-    val bad = PpdbOps.danglingUpdates(target, patch, spec).limit(1).collect()
-    if (bad.nonEmpty)
-      throw new IllegalStateException(
-        s"promote: update for missing $table row " + bad.head.toString)
-  }
-
   private def setStatus(ids: Seq[Long], status: String): DataFrame = {
     val chunks = catalog.read(spark, "PpdbReplicaChunk")
     chunks.withColumn("status",
@@ -548,4 +563,16 @@ final class Promoter(spark: SparkSession, val catalog: VersionedCatalog,
         .unionByName(row)), Some(expected))
     ()
   }
+}
+
+object Promoter {
+
+  /** One output table's share of a promote: the dirs it replaces, the
+    * rows replacing them, and the inputs of its J6 check — the batch's
+    * patch keys (see [[PpdbOps.patchKeys]]), those the probe found and
+    * those the batch stages. `label` names the table in J6 errors.
+    */
+  private final case class Scoped(label: String, table: String,
+      affected: Seq[String], rows: DataFrame, patch: Map[Row, Boolean],
+      found: Set[Row], staged: Set[Row])
 }

@@ -4,6 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
+
 import graft.catalog.VersionedCatalog
 
 class CatalogSpec extends SparkSpec {
@@ -168,16 +171,130 @@ class CatalogSpec extends SparkSpec {
       .forEachRemaining { p =>
         if (p.toString.endsWith(".parquet")) Files.write(p, "junk".getBytes)
       }
-    val probeA = Seq(5L).toDF("diaObjectId")
-    assert(cat.dirsTouching(spark, "z.DiaForcedSource",
-      Seq("diaObjectId"), probeA) == Seq(dirs.head),
+    val keys = StructType(Seq(StructField("diaObjectId", LongType)))
+    def probe(ids: Long*) = cat.dirsTouching(spark, "z.DiaForcedSource",
+      keys, ids.map(i => Row(i) -> true).toMap)
+    assert(probe(5L) == VersionedCatalog.KeyProbe(Seq(dirs.head), Set(Row(5L))),
       "zone map pruned the out-of-range dir driver-side")
+    // keys on both sides of dir B's range, none inside it: the bounds of
+    // the key set overlap B, but no single key can lie in B, so B is
+    // still pruned
+    assert(probe(5L, 50L, 200L).dirs == Seq(dirs.head))
     // a probe overlapping dir B's range DOES have to read it (and trips
     // over the corruption) — evidence the prune, not luck, skipped it
-    intercept[Exception] {
-      cat.dirsTouching(spark, "z.DiaForcedSource",
-        Seq("diaObjectId"), Seq(105L).toDF("diaObjectId"))
+    intercept[Exception](probe(105L))
+  }
+
+  test("dir probe returns the flagged keys it found, and an empty key " +
+      "set starts no job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.catalog.TableDelta
+    val cat = new VersionedCatalog(tmpDir("cat"))
+    def rows(ids: Seq[(Long, Long, Short)]) =
+      ids.toDF("diaObjectId", "visit", "detector")
+        .withColumn("midpointMjdTai", $"visit" + 60000.0)
+    cat.commit(Map("z.DiaForcedSource" ->
+      rows(Seq((1L, 10L, 1.toShort), (3L, 10L, 2.toShort),
+        (9L, 11L, 1.toShort)))))
+    cat.commitAll(Map("z.DiaForcedSource" -> TableDelta(
+      appends = Seq(rows(Seq((20L, 12L, 7.toShort))) -> "c2"))))
+    val Seq(dirA, dirB) = cat.current._2("z.DiaForcedSource")
+    val keys = StructType(Seq(StructField("diaObjectId", LongType),
+      StructField("visit", LongType), StructField("detector", ShortType)))
+    def k(o: Long, v: Long, d: Int) = Row(o, v, d.toShort)
+    val got = cat.dirsTouching(spark, "z.DiaForcedSource", keys, Map(
+      k(1, 10, 1) -> true, // present, flagged: found
+      k(3, 10, 2) -> false, // present, not flagged: opens its dir only
+      k(3, 10, 1) -> true, // inside dir A's range, absent: never found
+      k(20, 12, 7) -> false))
+    assert(got.dirs.toSet == Set(dirA, dirB))
+    assert(got.found == Set(k(1, 10, 1)), got.found)
+    // a flagged key whose dir holds other rows only: dir not touched
+    val miss = cat.dirsTouching(spark, "z.DiaForcedSource", keys,
+      Map(k(2, 10, 1) -> true))
+    assert(miss == VersionedCatalog.KeyProbe(Nil, Set.empty), miss)
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
     }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    val empty =
+      try cat.dirsTouching(spark, "z.DiaForcedSource", keys, Map.empty)
+      finally {
+        org.apache.spark.ListenerBusDrain(sc)
+        sc.removeSparkListener(l)
+      }
+    assert(empty == VersionedCatalog.KeyProbe(Nil, Set.empty))
+    assert(jobs.get == 0, s"${jobs.get} jobs for an empty key set")
+  }
+
+  test("an empty dir's zone map prunes it, and mayHold bounds what a " +
+      "table's dirs hold") {
+    import graft.catalog.TableDelta
+    val cat = new VersionedCatalog(tmpDir("cat"))
+    val field = StructField("diaObjectId", LongType)
+    assert(cat.mayHold("z.DiaObject", field).isEmpty, "no table, no values")
+    def rows(ids: Range) =
+      ids.map(i => (i.toLong, 60000.0 + i)).toDF("diaObjectId", "x")
+    cat.commit(Map("z.DiaObject" -> rows(1 to 0)))
+    val Seq(empty) = cat.current._2("z.DiaObject")
+    assert(new String(Files.readAllBytes(Paths.get(empty,
+      VersionedCatalog.ZoneMapFile))).trim == "{}")
+    assert(cat.mayHold("z.DiaObject", field).isEmpty, "only an empty dir")
+    cat.commitAll(Map("z.DiaObject" -> TableDelta(appends = Seq(
+      rows(10 to 20) -> "a", rows(40 to 50) -> "b"))))
+    val ids = (0L to 60L).toDF("diaObjectId")
+    def admitted = ids.where(cat.mayHold("z.DiaObject", field).get)
+      .as[Long].collect().toSet
+    assert(admitted == (10L to 50L).toSet, "the envelope of the dirs' bounds")
+    // the empty dir is never opened: a probe succeeds past its junk
+    Files.walk(Paths.get(empty)).iterator().forEachRemaining { p =>
+      if (p.toString.endsWith(".parquet")) Files.write(p, "junk".getBytes)
+    }
+    val probed = cat.dirsTouching(spark, "z.DiaObject", StructType(Seq(field)),
+      Map(Row(15L) -> true))
+    assert(probed.found == Set(Row(15L)) && probed.dirs.size == 1)
+    // a dir whose zone map is gone cannot be bounded
+    val withMap = cat.current._2("z.DiaObject").filterNot(_ == empty)
+    Files.delete(Paths.get(withMap.head, VersionedCatalog.ZoneMapFile))
+    assert(ids.where(cat.mayHold("z.DiaObject", field).get).count() == 61)
+  }
+
+  test("dir probe sends back distinct files and found keys, not one row " +
+      "per matching version") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val cat = new VersionedCatalog(tmpDir("cat"))
+    // 4000 versions of object 5 and one of object 6, in one dir
+    val versions = (1 to 4000).map(v => (5L, 60000.0 + v)) :+ ((6L, 60000.0))
+    cat.commit(Map("z.DiaObject" ->
+      versions.toDF("diaObjectId", "validityStartMjdTai").coalesce(1)))
+    val keys = StructType(Seq(StructField("diaObjectId", LongType)))
+    val resultBytes = new java.util.concurrent.atomic.AtomicLong()
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        resultBytes.addAndGet(e.taskMetrics.resultSize); ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    val got =
+      try cat.dirsTouching(spark, "z.DiaObject", keys,
+        Map(Row(5L) -> true, Row(6L) -> false))
+      finally {
+        org.apache.spark.ListenerBusDrain(sc)
+        sc.removeSparkListener(l)
+      }
+    assert(got == VersionedCatalog.KeyProbe(cat.current._2("z.DiaObject"),
+      Set(Row(5L))))
+    // one row per matching version would send back 4000 file paths
+    // (over 400 KB); a task's distinct files and keys fit in a few KB
+    assert(resultBytes.get < 64 * 1024, s"${resultBytes.get} result bytes")
   }
 
   test("time-bucket layout: range reads prune partition dirs") {

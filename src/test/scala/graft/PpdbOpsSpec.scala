@@ -27,7 +27,8 @@ class PpdbOpsSpec extends SparkSpec {
   import TestObj.o
 
   private def fill(objs: Seq[TestObj], scope: Seq[Long]): Map[(Long, Double), Option[Double]] =
-    PpdbOps.fillValidityEnd(objs.toDF(), scope.toDF("diaObjectId"))
+    PpdbOps.fillValidityEnd(objs.toDF(), objs.toDF().limit(0),
+        scope.toDF("diaObjectId"))
       .collect().map { r =>
         (r.getLong(0), r.getDouble(1)) ->
           (if (r.isNullAt(2)) None else Some(r.getDouble(2)))
@@ -66,6 +67,22 @@ class PpdbOpsSpec extends SparkSpec {
       o(2, 100.0, None), o(2, 200.0, None)), Seq(1))
     assert(m((1L, 100.0)).contains(200.0))
     assert(m((2L, 100.0)).isEmpty, "object 2 not in staging scope")
+  }
+
+  test("validity fill: incoming rows are always in scope, base rows only " +
+      "by their ids") {
+    val base = Seq(o(1, 100.0, None), o(2, 100.0, None), o(2, 200.0, None))
+    val incoming = Seq(o(1, 200.0, None), o(3, 100.0, None), o(3, 200.0, None))
+    val m = PpdbOps.fillValidityEnd(base.toDF(), incoming.toDF(),
+        Seq(1L).toDF("diaObjectId"))
+      .as[TestObj].collect()
+      .map(r => (r.diaObjectId, r.validityStartMjdTai) -> r.validityEndMjdTai)
+      .toMap
+    assert(m.size == 6)
+    assert(m((1L, 100.0)).contains(200.0), "base row of a listed id")
+    assert(m((3L, 100.0)).contains(200.0), "incoming id not in baseIds")
+    assert(m((3L, 200.0)).isEmpty)
+    assert(m((2L, 100.0)).isEmpty, "unlisted base id passes through")
   }
 
   private val t0 = 1640995200000000000L
@@ -144,12 +161,75 @@ class PpdbOpsSpec extends SparkSpec {
     assert(rows((200001L, 12345L, 43L)).isEmpty, "other detector untouched")
   }
 
+  test("patch keys are typed like the key columns; a narrowing that " +
+      "overflows fails like the ANSI cast") {
+    import org.apache.spark.sql.Row
+    val spec = PpdbOps.mergeSpecs("DiaForcedSource")
+    val keys = PpdbOps.keySchema(spec, graft.schema.PpdbSchema.diaForcedSource)
+    def u(det: Long, field: String) = PpdbOps.UpdateKey("DiaForcedSource",
+      Seq(200001L, 12345L, det), field)
+    val typed = PpdbOps.patchKeys(spark,
+      Seq(u(42L, "timeWithdrawnMjdTai"), u(43L, "flags"), u(43L, "flags"),
+        PpdbOps.UpdateKey("DiaSource", Seq(7L), "ssObjectId")),
+      spec, keys)
+    // one entry per key; only a merged field makes J6 require it
+    assert(typed == Map(Row(200001L, 12345L, 42.toShort) -> true,
+      Row(200001L, 12345L, 43.toShort) -> false))
+    assert(typed.keys.forall(_.get(2).isInstanceOf[Short]))
+    // the same cast a query applies: 40000 is out of a short's range
+    val e = intercept[ArithmeticException] {
+      PpdbOps.patchKeys(spark, Seq(u(40000L, "timeWithdrawnMjdTai")), spec,
+        keys)
+    }
+    assert(e.asInstanceOf[org.apache.spark.SparkThrowable].getCondition ==
+      "CAST_OVERFLOW", e.getMessage)
+  }
+
+  test("needed keys: those the table's dirs can hold or a patch key " +
+      "shares; no job when neither can apply") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val cat = new graft.catalog.VersionedCatalog(tmpDir("cat"))
+    def sources(ids: Seq[Long]) =
+      ids.map(i => (i, i / 2, 60000.0 + i))
+        .toDF("diaSourceId", "diaObjectId", "midpointMjdTai")
+    cat.commit(Map("internal.DiaSource" -> sources(100L to 110L)))
+    val spec = PpdbOps.mergeSpecs("DiaSource")
+    val stored = cat.read(spark, "internal.DiaSource")
+    val keys = PpdbOps.keySchema(spec, stored.schema)
+    // a batch of new sources, one stored key and one patched new key
+    val delta = sources(Seq(105L, 5000L) ++ (200L to 1200L))
+    val patch = Map[Row, Boolean](Row(5000L) -> true, Row(7L) -> true)
+    val mayHold = cat.mayHold("internal.DiaSource", keys.head)
+    assert(PpdbOps.neededKeys(delta, keys, mayHold, patch).toSet ==
+      Set(Row(105L), Row(5000L)))
+    assert(PpdbOps.neededKeys(delta, keys, mayHold, Map.empty) ==
+      Seq(Row(105L)))
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    val none =
+      try PpdbOps.neededKeys(delta, keys, None, Map.empty)
+      finally {
+        org.apache.spark.ListenerBusDrain(sc)
+        sc.removeSparkListener(l)
+      }
+    assert(none.isEmpty && jobs.get == 0, s"${jobs.get} jobs")
+  }
+
   test("dangling updates are detected (J6 validation)") {
     val target = Seq(o(1, 100.0, None)).toDF()
     val e = expanded((0L, UpdateNDiaSources(t0, 0, 999, 3)))
     val spec = PpdbOps.mergeSpecs("DiaObject")
     val patch = PpdbOps.buildPatch(PpdbOps.latestOnly(e), spec)
-    val dangling = PpdbOps.danglingUpdates(target, patch, spec).collect()
+    val dangling = J6Oracle.danglingUpdates(target, patch, spec).collect()
     assert(dangling.length == 1 && dangling.head.getLong(0) == 999L)
   }
 

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.catalog.VersionedCatalog
@@ -10,6 +11,9 @@ import graft.schema.PpdbSchema
 
 class PromoterSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Spark jobs of the steady-state one-chunk promote below. */
+  private val JobCeiling = 55
 
   private def fresh(): (Promoter, TestApdb) = {
     val cat = new VersionedCatalog(tmpDir("promo"))
@@ -78,6 +82,218 @@ class PromoterSpec extends SparkSpec {
       }
       assert(p.catalog.read(spark, "PpdbReplicaChunk")
         .select("status").head().getString(0) == PpdbSchema.ChunkStatus.Staged)
+    }
+  }
+
+  /** Runs `chunks` in order through both backends — a [[Promoter]]
+    * (export, stage and promote each chunk alone) and a [[PpdbSpark]]
+    * (store each chunk) — and gives, per backend, the message of the
+    * error the last chunk raised, or a reader of the data tables.
+    */
+  private def throughBoth(chunks: Seq[ChunkData])
+      : Seq[(String, Either[String, String => DataFrame])] = {
+    val p = new Promoter(spark, new VersionedCatalog(tmpDir("promo")),
+      tmpDir("export"))
+    p.init()
+    val direct = new PpdbSpark(spark, new VersionedCatalog(tmpDir("ppdb")))
+    direct.init()
+    def last[A](run: ChunkData => Unit, read: String => DataFrame) = {
+      chunks.init.foreach(run)
+      try { run(chunks.last); Right(read) }
+      catch { case e: IllegalStateException => Left(e.getMessage) }
+    }
+    Seq(
+      "Promoter" -> last(c => {
+        p.exportChunk(c); p.stageChunks(Seq(c.chunkId))
+        assert(p.promote() == Seq(c.chunkId)); ()
+      }, t => p.catalog.read(spark, s"internal.$t")),
+      "PpdbSpark" -> last(direct.store, t => direct.catalog.read(spark, t)))
+  }
+
+  test("J6 passes an update whose key only the same batch stages") {
+    import graft.schema.UpdateRecord._
+    // chunk 2 adds object 9000 and carries source 200002 and forced
+    // source (1003, visit 2, detector 3), which no earlier chunk has;
+    // each gets an update in the same chunk
+    val apdb = new TestApdb(spark, nObjects = 6, nChunks = 2, Map(2L -> Seq(
+      2L -> UpdateNDiaSources(5000L, 1L, 9000L, 7),
+      2L -> WithdrawDiaSource(5000L, 2L, 200002L, 60001.5),
+      2L -> WithdrawDiaForcedSource(5000L, 3L, 1003L, 2L, 3L, 60002.5)))) {
+      override def chunkData(id: Long): ChunkData = {
+        val c = super.chunkData(id)
+        if (id == 1L) c
+        else c.copy(diaObjects = c.diaObjects.unionByName(
+          c.diaObjects.where($"diaObjectId" === 1000L)
+            .withColumn("diaObjectId", lit(9000L))))
+      }
+    }
+    for ((backend, result) <- throughBoth(Seq(1L, 2L).map(apdb.chunkData))) {
+      val read = result.fold(m => fail(s"$backend: $m"), identity)
+      assert(read("DiaObject").where($"diaObjectId" === 9000L)
+        .select("nDiaSources").as[Int].collect().toSeq == Seq(7), backend)
+      assert(read("DiaSource").where($"diaSourceId" === 200002L)
+        .select("timeWithdrawnMjdTai").as[Double].collect().toSeq ==
+        Seq(60001.5), backend)
+      assert(read("DiaForcedSource").where($"timeWithdrawnMjdTai".isNotNull)
+        .select("diaObjectId", "visit", "detector").as[(Long, Long, Short)]
+        .collect().toSeq == Seq((1003L, 2L, 3.toShort)), backend)
+    }
+  }
+
+  test("J6 fails an update whose key lies inside a dir's zone-map range " +
+      "but is absent from the dir: the found keys decide, not the range") {
+    import graft.schema.UpdateRecord._
+    // object 1003, its source (i = 3) and its forced source are left out
+    // of every chunk, so chunk 1's dirs span their ids without holding
+    // them
+    class Gapped(updates: Map[Long, Seq[(Long, graft.schema.UpdateRecord)]])
+        extends TestApdb(spark, nObjects = 6, nChunks = 2, updates) {
+      override def chunkData(id: Long): ChunkData = {
+        val c = super.chunkData(id)
+        c.copy(diaObjects = c.diaObjects.where($"diaObjectId" =!= 1003L),
+          diaSources = c.diaSources.where($"diaObjectId" =!= 1003L),
+          diaForcedSources = c.diaForcedSources.where($"diaObjectId" =!= 1003L))
+      }
+    }
+    val absent = Map(
+      "DiaObject" -> UpdateNDiaSources(5000L, 1L, 1003L, 7),
+      "DiaSource" -> WithdrawDiaSource(5000L, 2L, 100003L, 60001.5),
+      "DiaForcedSource" ->
+        WithdrawDiaForcedSource(5000L, 3L, 1003L, 1L, 3L, 60002.5))
+    for (t <- PpdbSchema.dataTables) {
+      val apdb = new Gapped(Map(2L -> Seq(2L -> absent(t))))
+      for ((backend, result) <- throughBoth(Seq(1L, 2L).map(apdb.chunkData))) {
+        val msg = result.left.getOrElse(
+          fail(s"$backend let the $t update through"))
+        assert(msg.contains(s"missing $t row"), s"$backend: $msg")
+      }
+    }
+  }
+
+  test("J6 and the patch find a DiaForcedSource row by its composite key " +
+      "with a short detector") {
+    import graft.schema.UpdateRecord._
+    val apdb = new TestApdb(spark, nObjects = 6, nChunks = 2, Map(2L -> Seq(
+      2L -> WithdrawDiaForcedSource(5000L, 1L, 1002L, 1L, 2L, 60003.5))))
+    for ((backend, result) <- throughBoth(Seq(1L, 2L).map(apdb.chunkData))) {
+      val read = result.fold(m => fail(s"$backend: $m"), identity)
+      val withdrawn = read("DiaForcedSource")
+        .where($"timeWithdrawnMjdTai".isNotNull)
+        .select("diaObjectId", "visit", "detector", "timeWithdrawnMjdTai")
+        .as[(Long, Long, Short, Double)].collect().toSeq
+      assert(withdrawn == Seq((1002L, 1L, 2.toShort, 60003.5)), backend)
+      assert(read("DiaForcedSource").count() == 12, backend)
+    }
+  }
+
+  test("J6 on the driver equals the replayed J6 query on random batches") {
+    import graft.catalog.TableDelta
+    import graft.ops.PpdbOps
+    import org.apache.spark.sql.Row
+    val spec = PpdbOps.mergeSpecs("DiaForcedSource")
+    val table = "internal.DiaForcedSource"
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      def key(objLo: Int, objN: Int) =
+        (objLo + rnd.nextInt(objN).toLong, 1L + rnd.nextInt(3),
+          rnd.nextInt(4).toShort)
+      def rows(keys: Seq[(Long, Long, Short)]) =
+        keys.distinct.toDF("diaObjectId", "visit", "detector")
+          .withColumn("midpointMjdTai", $"visit" * 40.0 + 60000.0)
+          .withColumn("timeWithdrawnMjdTai", lit(null).cast("double"))
+      // three dirs with gapped, partly overlapping id ranges
+      val cat = new VersionedCatalog(tmpDir("j6"))
+      cat.commit(Map(table -> rows(Seq.fill(30)(key(1000, 40)))))
+      Seq((1030, 40), (2000, 20)).zipWithIndex.foreach { case ((lo, n), i) =>
+        cat.commitAll(Map(table -> TableDelta(
+          appends = Seq(rows(Seq.fill(30)(key(lo, n))) -> s"c$i"))))
+      }
+      val stored = cat.read(spark, table)
+      val existing = stored.select("diaObjectId", "visit", "detector")
+        .as[(Long, Long, Short)].collect().toSeq
+      val stagedKeys = Seq.fill(10)(key(1000, 1100))
+      // update targets: stored, staged, absent inside and outside the
+      // dirs' ranges; a third set an unmerged field, which J6 ignores
+      val targets = Seq.fill(6)(existing(rnd.nextInt(existing.size))) ++
+        stagedKeys.take(3) ++ Seq.fill(6)(key(1000, 1100)) ++
+        Seq.fill(2)(key(5000, 10))
+      val updates = targets.map { case (o, v, d) =>
+        PpdbOps.UpdateKey("DiaForcedSource", Seq(o, v, d.toLong),
+          if (rnd.nextInt(3) == 0) "flags" else "timeWithdrawnMjdTai")
+      }
+      val keys = PpdbOps.keySchema(spec, stored.schema)
+      val staged = stagedKeys.map { case (o, v, d) => Row(o, v, d) }.toSet
+      val patch = PpdbOps.patchKeys(spark, updates, spec, keys)
+      val probed = cat.dirsTouching(spark, table, keys,
+        staged.map(_ -> false).toMap ++ patch)
+      val onDriver = PpdbOps.danglingKeys(patch, probed.found, staged)
+        .map(r => (r.getLong(0), r.getLong(1), r.getShort(2))).toSet
+
+      val expanded = updates.map(u =>
+        (u.table, u.recordId, u.field, "60000.5", 1L, 1L, 1L)).toDF(
+        PpdbSchema.expandedUpdates.fieldNames.toSeq: _*)
+      val patchDf = PpdbOps.buildPatch(expanded, spec)
+      val stagedDf = rows(stagedKeys).select(stored.columns.map(col).toSeq: _*)
+      def replay(target: org.apache.spark.sql.DataFrame) =
+        J6Oracle.danglingUpdates(target.unionByName(stagedDf), patchDf, spec)
+          .as[(Long, Long, Long)].collect()
+          .map { case (o, v, d) => (o, v, d.toShort) }.toSet
+      // the replay over the whole table and over the probed dirs only
+      // (the scoped target the services merge into) agree with the driver
+      assert(onDriver == replay(stored), s"seed $seed")
+      val scoped =
+        if (probed.dirs.isEmpty) stored.limit(0)
+        else cat.readDirs(spark, probed.dirs, stored.columns.toSeq)
+      assert(onDriver == replay(scoped), s"seed $seed")
+      assert(onDriver.nonEmpty, s"seed $seed: no dangling key drawn")
+    }
+  }
+
+  test("a steady-state promote stays under its job ceiling and runs no " +
+      "job inside the J6 check") {
+    import graft.schema.UpdateRecord._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // chunks 1 and 2 leave dirs in every table; chunk 3 re-observes the
+    // objects and updates earlier rows of all three tables
+    val apdb = new TestApdb(spark, nObjects = 6, nChunks = 3, Map(3L -> Seq(
+      3L -> UpdateNDiaSources(5000L, 1L, 1001L, 9),
+      3L -> WithdrawDiaSource(5000L, 2L, 100002L, 60001.5),
+      3L -> WithdrawDiaForcedSource(5000L, 3L, 1002L, 2L, 2L, 60002.5))))
+    val p = new Promoter(spark, new VersionedCatalog(tmpDir("promo")),
+      tmpDir("export"))
+    p.init()
+    Seq(1L, 2L, 3L).foreach { id =>
+      p.exportChunk(apdb.chunkData(id)); p.stageChunks(Seq(id))
+      if (id < 3L) assert(p.promote() == Seq(id))
+    }
+    val jobTimes = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobTimes.add(e.time); ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    val samplesBefore = Metrics.snapshot().size
+    sc.addSparkListener(l)
+    try assert(p.promote() == Seq(3L))
+    finally {
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(l)
+    }
+    val jobs = jobTimes.toArray.toSeq.map(_.asInstanceOf[Long])
+    // the count this promote shape runs with the scope held on the
+    // driver; the bounds aggregates, distinct key shuffles and J6 replay
+    // queries it replaced would push it far above
+    assert(jobs.size <= JobCeiling, s"${jobs.size} jobs")
+    val validations = Metrics.snapshot().drop(samplesBefore)
+      .filter(_.metric == "promote_validate_time")
+    assert(validations.map(_.tags("table")).sorted ==
+      Seq("DiaForcedSource", "DiaObject", "DiaSource"))
+    validations.foreach { v =>
+      val endMs = v.startMs + v.seconds * 1000
+      val inside = jobs.filter(t => t >= v.startMs && t < endMs)
+      assert(inside.isEmpty, s"jobs started inside $v: $inside")
     }
   }
 
