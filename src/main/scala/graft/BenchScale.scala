@@ -981,8 +981,9 @@ object BenchScale {
     val nChunks = 3
     // update volume PROPORTIONAL to the corpus (nObj/10 per chunk — 100k
     // at ×100): the MERGE/patch path measured under the reference's real
-    // CDC load, not a 200-row token batch. update_validity_time lands in
-    // the timers block; per-phase shuffle records land next to the walls
+    // CDC load, not a 200-row token batch. The promote_* timers land in
+    // the timers block (its update_validity_time is the JDBC leg's, tag
+    // backend=jdbc); per-phase shuffle records land next to the walls
     val updPerChunk = math.max(200L, nObj / 10L).toInt
     val tmp = java.nio.file.Files.createTempDirectory("graft-scale").toFile
     val catalog = new VersionedCatalog(s"$tmp/catalog")

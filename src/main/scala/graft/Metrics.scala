@@ -17,6 +17,13 @@ import scala.collection.mutable
   * step's wall time. `promote_validate_time` (J6) overlaps nothing: it
   * runs on the caller's thread after every probe has ended, on the
   * driver, and starts no Spark job.
+  *
+  * Both timers belong to the scoped merge ([[replicate.ScopedMerge]]),
+  * so the direct store (`PpdbSpark.store`) emits them too, tagged
+  * `batch=chunk<id>` where promote's carry `batch=promo<first>_<last>`.
+  * The other `promote_*` timers (`promote_latest_updates_time`,
+  * `promote_commit_time`) stay promote's own; the direct store's commit
+  * is `store_data_time`.
   */
 object Metrics {
 

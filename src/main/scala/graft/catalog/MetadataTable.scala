@@ -65,6 +65,24 @@ final class MetadataTable(spark: SparkSession, catalog: VersionedCatalog,
     check(MetadataTable.CodeVersionKey, codeRunning)
   }
 
+  /** Record a store's schema version and the running code version. */
+  def stamp(schemaVersion: graft.schema.VersionTuple): Unit = {
+    init()
+    set(MetadataTable.SchemaVersionKey, schemaVersion.render, force = true)
+    set(MetadataTable.CodeVersionKey,
+      graft.schema.VersionTuple.Current.render, force = true)
+  }
+
+  /** Open a PPDB store, or create it when `exists` is false: reopening
+    * CHECKS the stored versions against the running code
+    * (P/sql/_ppdb_sql_base.py:156-158,333-372) and refuses incompatible
+    * stores; creating runs `create` and then [[stamp]]s the versions.
+    */
+  def openOrCreate(exists: Boolean)(create: => Unit): Unit =
+    if (exists) checkCompatibility(graft.schema.PpdbSchema.schemaVersion,
+      graft.schema.VersionTuple.Current)
+    else { create; stamp(graft.schema.PpdbSchema.schemaVersion) }
+
   private def write(m: Map[String, String]): Unit = {
     val rows = m.toSeq.sortBy(_._1).map { case (k, v) => Row(k, v) }
     catalog.commit(Map(table ->

@@ -330,9 +330,8 @@ final class VersionedCatalog(val root: String,
     // per-commit nonce in the data-dir names: two processes racing to
     // commit id `next` materialize under different paths, so the loser's
     // dirs are mere vacuum-able orphans — never a shared-path overwrite
-    val nonce = java.lang.Long.toHexString(
-      java.util.concurrent.ThreadLocalRandom.current().nextLong()
-        & 0xffffffffL)
+    val nonce = f"${java.util.concurrent.ThreadLocalRandom.current()
+      .nextLong() & 0xffffffffL}%08x"
     deltas.foreach { case (table, d) =>
       require(d.rewrite.isEmpty || d.appends.isEmpty,
         s"$table: rewrite and append are exclusive")
@@ -948,16 +947,25 @@ final class VersionedCatalog(val root: String,
         org.apache.spark.sql.functions.col("*")))
   }
 
-  // minimal flat JSON: {"commit":N,"tables":{"name":["dir",...],...},
-  // "writer":"uuid"}. The writer field is the publish-ownership nonce;
-  // parse() ignores it (string-valued, so it can't match a table entry).
+  // minimal flat JSON: {"commit":N,"relative":true,"tables":{"name":
+  // ["dir",...],...},"writer":"uuid"}. Dirs under the root are stored
+  // relative to it, so the metadata's bytes do not depend on where the
+  // store lives; parse resolves them against the root, giving back the
+  // dir strings the writes made. A file without the "relative" flag
+  // (written before it existed) holds every dir as written. The writer
+  // field is the publish-ownership nonce; parse() ignores it
+  // (string-valued, so it can't match a table entry).
   private def render(commitId: Long, dirs: Map[String, Seq[String]],
       nonce: String = ""): String = {
+    val under = rootPath.toString + java.io.File.separator
+    def stored(d: String) =
+      if (d.startsWith(under)) d.substring(under.length)
+      else Paths.get(d).toAbsolutePath.toString
     val entries = dirs.toSeq.sortBy(_._1).map { case (t, ds) =>
-      s""""${esc(t)}":${ds.map(d => s""""${esc(d)}"""").mkString("[", ",", "]")}"""
+      s""""${esc(t)}":${ds.map(d => s""""${esc(stored(d))}"""").mkString("[", ",", "]")}"""
     }.mkString(",")
     val writer = if (nonce.isEmpty) "" else s""","writer":"$nonce""""
-    s"""{"commit":$commitId,"tables":{$entries}$writer}"""
+    s"""{"commit":$commitId,"relative":true,"tables":{$entries}$writer}"""
   }
 
   private def esc(s: String): String =
@@ -966,6 +974,10 @@ final class VersionedCatalog(val root: String,
   private def parse(json: String): (Long, Map[String, Seq[String]]) = {
     val commit = """"commit"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
       .map(_.group(1).toLong).getOrElse(0L)
+    val relative = """"relative"\s*:\s*true""".r.findFirstIn(json).isDefined
+    def dir(d: String) =
+      if (!relative || Paths.get(d).isAbsolute) d
+      else rootPath.resolve(d).toString
     val tablesBody = json.indexOf("\"tables\"") match {
       case -1 => ""
       case i => json.substring(json.indexOf('{', i) + 1)
@@ -974,7 +986,7 @@ final class VersionedCatalog(val root: String,
     val str = """"((?:[^"\\]|\\.)*)"""".r
     val dirs = entry.findAllMatchIn(tablesBody).map { m =>
       unesc(m.group(1)) ->
-        str.findAllMatchIn(m.group(2)).map(s => unesc(s.group(1))).toSeq
+        str.findAllMatchIn(m.group(2)).map(s => dir(unesc(s.group(1)))).toSeq
     }.toMap
     (commit, dirs)
   }

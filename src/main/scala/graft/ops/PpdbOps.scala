@@ -194,6 +194,13 @@ object PpdbOps {
       schema: StructType): DataFrame =
     spark.createDataFrame(java.util.List.of(rows: _*), schema)
 
+  /** An empty DataFrame of `schema` that the optimizer does not fold
+    * away (it is not a local relation), so the plan that reads it keeps
+    * its shape.
+    */
+  def emptyRows(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+
   /** The record keys `updates` patch in `spec.table`, as rows typed like
     * `keySchema` — the driver-side scope used for dir-level pruning and
     * scoped merges. A key maps to true when one of its updates sets a
@@ -266,19 +273,6 @@ object PpdbOps {
     patch.iterator.collect {
       case (k, true) if !found(k) && !staged(k) => k
     }.toSeq
-
-  /** Apply a chunk's updates to the three data tables: LWW collapse, then
-    * per-table patch build + merge. Returns patched tables keyed by name.
-    */
-  def applyUpdates(tables: Map[String, DataFrame],
-      expanded: DataFrame): Map[String, DataFrame] = {
-    val latest = latestOnly(expanded).cache()
-    PpdbSchema.dataTables.map { t =>
-      val spec = mergeSpecs(t)
-      val patch = buildPatch(latest, spec)
-      t -> mergePatch(tables(t), patch, spec)
-    }.toMap
-  }
 
   // -------------------------------------------------------------- snapshot
 

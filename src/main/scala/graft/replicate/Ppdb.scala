@@ -58,6 +58,37 @@ trait ReplicaTarget extends Ppdb {
   def store(chunk: ChunkData, update: Boolean, known: Boolean): Unit
 }
 
+/** The chunk bookkeeping the two Parquet targets share: both keep the
+  * reference's `PpdbReplicaChunk` table and `metadata` table in their
+  * [[VersionedCatalog]].
+  */
+sealed abstract class CatalogTarget(spark: SparkSession)
+    extends ReplicaTarget {
+  def catalog: VersionedCatalog
+
+  /** Persisted key/value metadata (reference `metadata` table,
+    * P/sql/_ppdb_sql_base.py:151-154).
+    */
+  def meta: MetadataTable
+
+  def store(chunk: ChunkData): Unit = store(chunk, update = false)
+
+  /** Whether the chunk table holds `chunkId` (one bookkeeping read). */
+  protected def isKnown(chunkId: Long): Boolean =
+    catalog.read(spark, "PpdbReplicaChunk")
+      .where(col("apdb_replica_chunk") === chunkId)
+      .limit(1).count() > 0
+
+  def replicaChunks(minId: Option[Long] = None): DataFrame = {
+    val base = catalog.read(spark, "PpdbReplicaChunk")
+    val filtered = minId.fold(base)(m => base.where(col("apdb_replica_chunk") >= m))
+    filtered.orderBy("last_update_time_us")
+  }
+
+  def metadata: Map[String, String] =
+    meta.items + ("catalog_root" -> catalog.root)
+}
+
 /** Staged-backend replication target: `store` exports the chunk to
   * parquet + manifest with status=exported (the reference's BigQuery
   * `Ppdb.store`, P/bigquery/ppdb_bigquery.py:403-488), after which the
@@ -66,29 +97,17 @@ trait ReplicaTarget extends Ppdb {
   * (exportChunk upserts both the export dir and the bookkeeping row).
   */
 final class PpdbStaged(spark: SparkSession, val promoter: Promoter)
-    extends ReplicaTarget {
+    extends CatalogTarget(spark) {
 
-  def store(chunk: ChunkData): Unit = store(chunk, update = false)
+  def catalog: VersionedCatalog = promoter.catalog
+  def meta: MetadataTable = promoter.meta
 
-  def store(chunk: ChunkData, update: Boolean): Unit = {
-    // update mode re-exports regardless of the probe's answer — skip it
-    val known = update || promoter.catalog.read(spark, "PpdbReplicaChunk")
-      .where(col("apdb_replica_chunk") === chunk.chunkId)
-      .limit(1).collect().nonEmpty
-    store(chunk, update, known)
-  }
+  // update mode re-exports regardless of the probe's answer — skip it
+  def store(chunk: ChunkData, update: Boolean): Unit =
+    store(chunk, update, update || isKnown(chunk.chunkId))
 
   def store(chunk: ChunkData, update: Boolean, known: Boolean): Unit =
     if (!known || update) { promoter.exportChunk(chunk); () }
-
-  def replicaChunks(minId: Option[Long] = None): DataFrame = {
-    val base = promoter.catalog.read(spark, "PpdbReplicaChunk")
-    val filtered = minId.fold(base)(m => base.where(col("apdb_replica_chunk") >= m))
-    filtered.orderBy("last_update_time_us")
-  }
-
-  def metadata: Map[String, String] =
-    promoter.meta.items + ("catalog_root" -> promoter.catalog.root)
 }
 
 /** Spark-native PPDB over a [[VersionedCatalog]], reproducing the SQL
@@ -96,45 +115,27 @@ final class PpdbStaged(spark: SparkSession, val promoter: Promoter)
   * DiaObject rows, close superseded validity intervals, append the fact
   * tables, apply ordered update records with existence validation, and
   * upsert the chunk bookkeeping row — all published in ONE atomic catalog
-  * commit (T7), so readers never observe partial chunks.
+  * commit (T7), so readers never observe partial chunks. The merge is
+  * [[ScopedMerge.plan]], the same one [[Promoter]] promotes with.
   */
 final class PpdbSpark(spark: SparkSession, val catalog: VersionedCatalog)
-    extends ReplicaTarget {
+    extends CatalogTarget(spark) {
 
-  val schemaVersion = "graft-ppdb:0.1.0"
-
-  /** Persisted key/value metadata (reference `metadata` table,
-    * P/sql/_ppdb_sql_base.py:151-154).
-    */
   val meta = new MetadataTable(spark, catalog)
-
-  private def emptyDf(schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** Idempotent initialization: publish empty versions of all tables and
     * record the schema/code versions in the metadata table. Reopening an
-    * existing store instead CHECKS the stored versions against the
-    * running code (P/sql/_ppdb_sql_base.py:156-158,333-372) and refuses
-    * incompatible stores.
+    * existing store instead checks the stored versions
+    * ([[MetadataTable.openOrCreate]]).
     */
-  def init(): Unit = {
-    if (!catalog.exists("DiaObject")) {
-      catalog.commit(Map(
-        "DiaObject" -> emptyDf(PpdbSchema.diaObject),
-        "DiaSource" -> emptyDf(PpdbSchema.diaSource),
-        "DiaForcedSource" -> emptyDf(PpdbSchema.diaForcedSource),
-        "PpdbReplicaChunk" -> emptyDf(PpdbSchema.replicaChunk)))
-      meta.init()
-      meta.set(MetadataTable.SchemaVersionKey,
-        PpdbSchema.schemaVersion.render, force = true)
-      meta.set(MetadataTable.CodeVersionKey,
-        VersionTuple.Current.render, force = true)
-    } else checkVersions()
+  def init(): Unit = meta.openOrCreate(catalog.exists("DiaObject")) {
+    catalog.commit(Map(
+      "DiaObject" -> PpdbOps.emptyRows(spark, PpdbSchema.diaObject),
+      "DiaSource" -> PpdbOps.emptyRows(spark, PpdbSchema.diaSource),
+      "DiaForcedSource" -> PpdbOps.emptyRows(spark, PpdbSchema.diaForcedSource),
+      "PpdbReplicaChunk" -> PpdbOps.emptyRows(spark, PpdbSchema.replicaChunk)))
+    ()
   }
-
-  /** Refuse stores written by an incompatible schema or newer code line. */
-  def checkVersions(): Unit =
-    meta.checkCompatibility(PpdbSchema.schemaVersion, VersionTuple.Current)
 
   /** Schema-driven store creation — the reference's Felis-YAML `create`
     * path (P/cli/ppdb_cli.py:60-68 create-sql + --drop,
@@ -162,24 +163,11 @@ final class PpdbSpark(spark: SparkSession, val catalog: VersionedCatalog)
     val withChunk = tableSchemas ++
       (if (tableSchemas.exists(_._1 == "PpdbReplicaChunk")) Nil
        else Seq("PpdbReplicaChunk" -> PpdbSchema.replicaChunk))
-    catalog.commit(withChunk.map { case (t, s) => t -> emptyDf(s) }.toMap)
+    catalog.commit(withChunk.map { case (t, s) =>
+      t -> PpdbOps.emptyRows(spark, s) }.toMap)
     withChunk.foreach { case (t, s) => registry.put(t, s, version) }
-    meta.init()
-    meta.set(MetadataTable.SchemaVersionKey, version.render, force = true)
-    meta.set(MetadataTable.CodeVersionKey, VersionTuple.Current.render,
-      force = true)
+    meta.stamp(version)
   }
-
-  def replicaChunks(minId: Option[Long] = None): DataFrame = {
-    val base = catalog.read(spark, "PpdbReplicaChunk")
-    val filtered = minId.fold(base)(m => base.where(col("apdb_replica_chunk") >= m))
-    filtered.orderBy("last_update_time_us")
-  }
-
-  def metadata: Map[String, String] =
-    meta.items + ("catalog_root" -> catalog.root)
-
-  def store(chunk: ChunkData): Unit = store(chunk, update = false)
 
   /** Exactly-once, in-order chunk store (T3): re-storing a known chunk id
     * is a no-op; chunk ids must arrive in ascending order.
@@ -199,158 +187,56 @@ final class PpdbSpark(spark: SparkSession, val catalog: VersionedCatalog)
     * ingested as APPEND deltas — one new directory per chunk, zero
     * rewrite — and when an update record patches them, only the
     * DIRECTORIES containing patched keys are rewritten
-    * ([[VersionedCatalog.dirsTouching]], probed with the chunk's keys
-    * held on the driver; the same probe settles J6). The DiaObject
-    * validity fill is likewise scoped to the dirs holding this chunk's
-    * object ids, so the per-chunk cost is O(chunk + touched dirs), never
-    * O(table).
+    * ([[ScopedMerge.plan]]). The DiaObject validity fill is likewise
+    * scoped to the dirs holding this chunk's object ids, so the
+    * per-chunk cost is O(chunk + touched dirs), never O(table).
     */
-  def store(chunk: ChunkData, update: Boolean): Unit = {
-    val known = catalog.read(spark, "PpdbReplicaChunk")
-      .where(col("apdb_replica_chunk") === chunk.chunkId)
-      .limit(1).count() > 0
-    store(chunk, update, known)
-  }
+  def store(chunk: ChunkData, update: Boolean): Unit =
+    store(chunk, update, isKnown(chunk.chunkId))
 
   def store(chunk: ChunkData, update: Boolean, known: Boolean): Unit = {
     if (known && !update) return
     catalog.retrying() { expected =>
-    val chunks = catalog.read(spark, "PpdbReplicaChunk")
-
-    val objects = catalog.read(spark, "DiaObject")
-    val sources = catalog.read(spark, "DiaSource")
-    val forced = catalog.read(spark, "DiaForcedSource")
     val label = s"chunk${chunk.chunkId}"
-
-    val latestOpt =
+    val latest =
       if (chunk.updates.isEmpty) None
       else Some(PpdbOps.latestOnly(
         PpdbOps.expandUpdates(spark, chunk.updates)).cache())
     try {
-    // the update targets come to the driver in one collect; they also
-    // say which tables the chunk touches
-    val updateKeys = latestOpt.fold(Seq.empty[PpdbOps.UpdateKey])(
-      PpdbOps.updateKeys)
-    val touched = updateKeys.map(_.table).toSet
+    // upsert mode: incoming rows REPLACE same-PK rows
+    val merged = ScopedMerge.plan(spark, catalog, "", Map(
+        "DiaObject" -> chunk.diaObjects,
+        "DiaSource" -> chunk.diaSources,
+        "DiaForcedSource" -> chunk.diaForcedSources),
+      latest, latest.fold(Seq.empty[PpdbOps.UpdateKey])(PpdbOps.updateKeys),
+      snapshot = None, replace = update, label)
 
-    // 1. DiaObject: insert new versions and close superseded intervals
-    //    (LEAD fill, W2+J3) — scoped to the dirs holding this chunk's
-    //    object ids or patched object ids; other dirs carry over as-is
-    val objSpec = PpdbOps.mergeSpecs("DiaObject")
-    val objKeys = PpdbOps.keySchema(objSpec, objects.schema)
-    val pkSchema = objKeys.add(objects.schema("validityStartMjdTai"))
-    val objPatch = PpdbOps.patchKeys(spark, updateKeys, objSpec, objKeys)
-    // the chunk's PKs that the table's dirs can hold or that share an id
-    // with a patch key; the others are new objects
-    val chunkPks = PpdbOps.neededKeys(chunk.diaObjects, pkSchema,
-      catalog.mayHold("DiaObject", objKeys.head), objPatch)
-    val chunkIds = chunkPks.map(r => Row(r.get(0))).toSet
-    val objProbe = catalog.dirsTouching(spark, "DiaObject", objKeys,
-      chunkIds.map(_ -> false).toMap ++ objPatch)
-    val objBase0 =
-      if (objProbe.dirs.isEmpty) emptyDf(objects.schema)
-      else catalog.readDirs(spark, objProbe.dirs, objects.columns.toSeq)
-    // upsert mode: incoming rows REPLACE same-PK versions
-    val objBase =
-      if (!update) objBase0
-      else objBase0.join(
-        broadcast(PpdbOps.localRows(spark, chunkPks, pkSchema)),
-        Seq("diaObjectId", "validityStartMjdTai"), "left_anti")
-    val filled = graft.Metrics.time("update_validity_time",
-        "table" -> "DiaObject") {
-      PpdbOps.fillValidityEnd(objBase,
-        chunk.diaObjects.select(objects.columns.map(col).toSeq: _*),
-        PpdbOps.localRows(spark, chunkIds.toSeq, objKeys))
-    }
-
-    val srcDelta = chunk.diaSources.select(sources.columns.map(col).toSeq: _*)
-    val fsrcDelta = chunk.diaForcedSources.select(forced.columns.map(col).toSeq: _*)
-
-    // 2. ordered update records (LWW collapse + per-table patch merge,
-    //    J4/J5) with existence validation (J6), settled on the driver:
-    //    any existing row with a patched key lives in a dir the probe
-    //    scanned, so a patched key neither found there nor carried by the
-    //    chunk is missing from the table
-    def requireFound(table: String, patch: Map[Row, Boolean],
-        found: Set[Row], staged: Set[Row]): Unit =
-      PpdbOps.danglingKeys(patch, found, staged).headOption.foreach { k =>
-        throw new IllegalStateException(
-          s"chunk ${chunk.chunkId}: update for missing $table row " +
-            k.toString)
-      }
-    def scopedFact(t: String, full: DataFrame,
-        delta: DataFrame): TableDelta = {
-      if (!touched(t) && !update)
-        return TableDelta(appends = Seq(delta -> label))
-      val spec = PpdbOps.mergeSpecs(t)
-      val keys = PpdbOps.keySchema(spec, full.schema)
-      val patch = PpdbOps.patchKeys(spark, updateKeys, spec, keys)
-      // the chunk's own keys that J6 may look for and, in upsert mode,
-      // those the table's dirs can hold: the rows the incoming delta's
-      // PKs replace (spec.keys IS the fact-table PK)
-      val deltaKeys = PpdbOps.neededKeys(delta, keys,
-        if (update) catalog.mayHold(t, keys.head) else None, patch)
-      // dirs to open: those holding patched keys and, in upsert mode,
-      // those holding rows the incoming delta replaces
-      val probed = catalog.dirsTouching(spark, t, keys,
-        (if (update) deltaKeys.map(_ -> false).toMap
-         else Map.empty[Row, Boolean]) ++ patch)
-      requireFound(t, patch, probed.found, deltaKeys.toSet)
-      val base0 =
-        if (probed.dirs.isEmpty) emptyDf(full.schema)
-        else catalog.readDirs(spark, probed.dirs, full.columns.toSeq)
-      val base =
-        if (!update) base0
-        else base0.join(broadcast(PpdbOps.localRows(spark, deltaKeys, keys)),
-          spec.keys,
-          "left_anti")
-      val rows = base.unionByName(delta)
-      val patched =
-        if (patch.isEmpty) rows
-        else PpdbOps.mergePatch(rows, PpdbOps.buildPatch(latestOpt.get, spec),
-          spec)
-      TableDelta(dropDirs = probed.dirs.toSet, appends = Seq(patched -> label))
-    }
-    val objDelta = {
-      requireFound("DiaObject", objPatch, objProbe.found, chunkIds)
-      val objPatched =
-        if (objPatch.isEmpty) filled
-        else PpdbOps.mergePatch(filled,
-          PpdbOps.buildPatch(latestOpt.get, objSpec), objSpec)
-      TableDelta(dropDirs = objProbe.dirs.toSet,
-        appends = Seq(objPatched -> label))
-    }
-
-    // 3. chunk bookkeeping row (appended; the control table stays tiny)
+    // chunk bookkeeping row: appended (the control table stays tiny), or
+    // in update mode a rewrite of the control table so the chunk keeps
+    // exactly one row
     val newChunkRow = spark.createDataFrame(
       java.util.List.of(Row(chunk.chunkId, chunk.lastUpdateTimeUs,
         chunk.uniqueId, System.currentTimeMillis() * 1000L,
         PpdbSchema.ChunkStatus.Promoted, null,
         chunk.updates.size.toLong)),
       PpdbSchema.replicaChunk)
-
-    // 4. single atomic commit: scoped DiaObject + fact appends (scoped
-    //    rewrites only where patched/upserted) + bookkeeping append, or
-    //    in update mode a rewrite of the (tiny) control table so the
-    //    chunk keeps exactly one row
     val chunkDelta =
       if (known) TableDelta(rewrite = Some(
-        chunks.where(col("apdb_replica_chunk") =!= chunk.chunkId)
+        catalog.read(spark, "PpdbReplicaChunk")
+          .where(col("apdb_replica_chunk") =!= chunk.chunkId)
           .unionByName(newChunkRow)))
       else TableDelta(appends = Seq(newChunkRow -> label))
+    // single atomic commit: the merged tables + the bookkeeping row
     graft.Metrics.time("store_data_time",
         "chunk_id" -> chunk.chunkId.toString) {
-    catalog.commitAll(Map(
-      "DiaObject" -> objDelta,
-      "DiaSource" -> scopedFact("DiaSource", sources, srcDelta),
-      "DiaForcedSource" -> scopedFact("DiaForcedSource", forced, fsrcDelta),
-      "PpdbReplicaChunk" -> chunkDelta), Some(expected))
+    catalog.commitAll(merged + ("PpdbReplicaChunk" -> chunkDelta),
+      Some(expected))
     }
     ()
     // the patch cache is only read by the writes above; drop it even when
     // J6 or commitAll throws, so storage memory doesn't accumulate across
     // retried store() calls
-    } finally latestOpt.foreach(_.unpersist())
+    } finally latest.foreach(_.unpersist())
     }
   }
 }

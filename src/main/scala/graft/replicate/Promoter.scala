@@ -5,9 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.catalog.{MetadataTable, TableDelta, VersionedCatalog}
-import graft.functions.SpatialCell
 import graft.ops.PpdbOps
-import graft.schema.{PpdbSchema, UpdateRecord, VersionTuple}
+import graft.schema.PpdbSchema
 
 /** The staged (lakehouse) pipeline — the Spark re-expression of the
   * reference's BigQuery backend:
@@ -23,17 +22,10 @@ import graft.schema.{PpdbSchema, UpdateRecord, VersionTuple}
   *     delete, status=promoted — all published as ONE atomic commit
   *     (chunk_promoter.py:117-348).
   *
-  * Promote's scope is held on the driver: the batch's update targets
-  * come in one collect, and per table one filtered scan (no shuffle)
-  * collects the staged keys that the table's dirs can hold, per their
-  * zone maps, or that share an id with an update target, typed like the
-  * target key columns. Staged keys new to a table stay off the driver,
-  * so its memory follows the batch's overlap with stored data, not the
-  * batch size. One dir probe per table takes those keys, and also
-  * reports which patched keys it found, so the J6 check (an update must
-  * target an existing row) is a set difference on the driver instead of
-  * a query. The rewrite plans' scope joins use the same keys as
-  * broadcast local relations.
+  * Promote's merge is [[ScopedMerge.plan]], the one [[PpdbSpark.store]]
+  * also runs: the scope is held on the driver, one dir probe per table
+  * also settles J6 (an update must target an existing row), and only
+  * the dirs holding a staged or patched key are rewritten.
   *
   * Concurrency: the Spark jobs of one step that do not depend on each
   * other run at the same time ([[graft.Concurrently]]) — export's three
@@ -50,39 +42,28 @@ import graft.schema.{PpdbSchema, UpdateRecord, VersionTuple}
   */
 final class Promoter(spark: SparkSession, val catalog: VersionedCatalog,
     exportRoot: String) {
-  import Promoter.Scoped
-
   val schemaVersion = "graft-ppdb:0.1.0"
 
   /** Persisted key/value metadata (reference `metadata` table). */
   val meta = new MetadataTable(spark, catalog)
 
-  private def emptyDf(schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-
-  def init(): Unit = {
-    if (catalog.exists("internal.DiaObject")) {
-      // reopen: refuse stores written by an incompatible schema/code line
-      meta.checkCompatibility(PpdbSchema.schemaVersion, VersionTuple.Current)
-      return
-    }
-    meta.init()
-    meta.set(MetadataTable.SchemaVersionKey,
-      PpdbSchema.schemaVersion.render, force = true)
-    meta.set(MetadataTable.CodeVersionKey,
-      VersionTuple.Current.render, force = true)
+  /** Idempotent initialization: publish the empty internal and staging
+    * tables with the schema/code versions, or on reopen check them
+    * ([[MetadataTable.openOrCreate]]).
+    */
+  def init(): Unit = meta.openOrCreate(catalog.exists("internal.DiaObject")) {
+    def staged(s: StructType) =
+      s.add("apdb_replica_chunk", "long", nullable = false)
     catalog.commit(Map(
-        "internal.DiaObject" -> emptyDf(PpdbSchema.diaObject),
-        "internal.DiaSource" -> emptyDf(PpdbSchema.diaSource),
-        "internal.DiaForcedSource" -> emptyDf(PpdbSchema.diaForcedSource),
-        "staging.DiaObject" -> emptyDf(PpdbSchema.diaObject
-          .add("apdb_replica_chunk", "long", nullable = false)),
-        "staging.DiaSource" -> emptyDf(PpdbSchema.diaSource
-          .add("apdb_replica_chunk", "long", nullable = false)),
-        "staging.DiaForcedSource" -> emptyDf(PpdbSchema.diaForcedSource
-          .add("apdb_replica_chunk", "long", nullable = false)),
-        "staging.updates" -> emptyDf(PpdbSchema.expandedUpdates),
-        "PpdbReplicaChunk" -> emptyDf(PpdbSchema.replicaChunk)))
+        "internal.DiaObject" -> PpdbSchema.diaObject,
+        "internal.DiaSource" -> PpdbSchema.diaSource,
+        "internal.DiaForcedSource" -> PpdbSchema.diaForcedSource,
+        "staging.DiaObject" -> staged(PpdbSchema.diaObject),
+        "staging.DiaSource" -> staged(PpdbSchema.diaSource),
+        "staging.DiaForcedSource" -> staged(PpdbSchema.diaForcedSource),
+        "staging.updates" -> PpdbSchema.expandedUpdates,
+        "PpdbReplicaChunk" -> PpdbSchema.replicaChunk)
+      .map { case (t, s) => t -> PpdbOps.emptyRows(spark, s) })
     ()
   }
 
@@ -267,7 +248,7 @@ final class Promoter(spark: SparkSession, val catalog: VersionedCatalog,
     * catalog's pruned [[VersionedCatalog.dirsTouching]] probe over the
     * driver-held keys). Every other directory's bytes carry over
     * untouched — so one stray update record against a 100 TB fact table
-    * costs a per-dir rewrite, not a table rewrite.
+    * costs a per-dir rewrite, not a table rewrite ([[ScopedMerge.plan]]).
     */
   def promote(): Seq[Long] = promote(None)
 
@@ -292,7 +273,6 @@ final class Promoter(spark: SparkSession, val catalog: VersionedCatalog,
   private def promoteBatch(ids: Seq[Long], expected: Long): Seq[Long] = {
     val inChunks = col("apdb_replica_chunk").isin(ids: _*)
     val batchLabel = s"promo${ids.head}_${ids.last}"
-    val batchTag = "batch" -> batchLabel
 
     // T6/W3: latest-only update patches for the batch. The cache feeds
     // the patch merges at commit time; its targets come to the driver in
@@ -301,149 +281,17 @@ final class Promoter(spark: SparkSession, val catalog: VersionedCatalog,
     val latest = PpdbOps.latestOnly(updates).cache()
     try {
     val updateKeys = graft.Metrics.time("promote_latest_updates_time",
-      batchTag)(PpdbOps.updateKeys(latest))
+      "batch" -> batchLabel)(PpdbOps.updateKeys(latest))
 
-    // J9: staged rows for the batch, realigned to internal schema
-    val stagedObj = catalog.read(spark, "staging.DiaObject").where(inChunks)
-      .drop("apdb_replica_chunk")
-    val internalObj = catalog.read(spark, "internal.DiaObject")
-    val objSpec = PpdbOps.mergeSpecs("DiaObject")
-    val objKeys = PpdbOps.keySchema(objSpec, internalObj.schema)
-
-    def probe(table: String, keySchema: StructType, keys: Map[Row, Boolean]) =
-      graft.Metrics.time("promote_dir_probe_time", batchTag,
-          "table" -> table) {
-        catalog.dirsTouching(spark, table, keySchema, keys)
-      }
-
-    // Each output table's chain reads the staged keys it needs to the
-    // driver (one filtered scan, no shuffle): those the table's dirs can
-    // hold per their zone maps, and those sharing an id with a patch key.
-    // The rest are new to the table, so neither the probe, the same-key
-    // replacement nor J6 needs them, and a large batch of new rows costs
-    // the driver nothing. The chain then probes the dirs holding a needed
-    // or patched key and builds the plan of the rows replacing them. The
-    // chains share no state, so they run concurrently; nothing commits
-    // until all have finished, and a failure surfaces as the first in
-    // chain order (DiaObject, DiaSource, DiaForcedSource), whatever the
-    // thread timing. Every scope join below uses the driver-held keys as
-    // a broadcast local relation.
-    val snapTable = "public.DiaObjectLast"
-    val objectChain = () => {
-      val idField = objKeys.head
-      val pkSchema = objKeys.add(internalObj.schema("validityStartMjdTai"))
-      val patch = PpdbOps.patchKeys(spark, updateKeys, objSpec, objKeys)
-      // the snapshot (S14) shares the ids: a key either table can hold
-      val mayExist = (catalog.mayHold("internal.DiaObject", idField) ++
-        catalog.mayHold(snapTable, idField)).reduceOption(_ || _)
-      val stagedPks = PpdbOps.neededKeys(stagedObj, pkSchema, mayExist, patch)
-      val staged = stagedPks.map(r => Row(r.get(0))).toSet
-      val scope = staged.map(_ -> false).toMap ++ patch
-      // the public snapshot is scoped like the source table: only its
-      // dirs holding a scoped object id are rewritten
-      val Seq(objProbe, snapProbe) = graft.Concurrently.all(Seq(
-        () => probe("internal.DiaObject", objKeys, scope),
-        () => probe(snapTable, objKeys, scope)))
-      val stagedIds = PpdbOps.localRows(spark, staged.toSeq, objKeys)
-      val scopeIds = PpdbOps.localRows(spark, scope.keys.toSeq, objKeys)
-
-      // DiaObject: W2/J3 validity fill + A1/J4 patch over the probed dirs
-      val objBase0 =
-        if (objProbe.dirs.isEmpty) emptyDf(internalObj.schema)
-        else catalog.readDirs(spark, objProbe.dirs, internalObj.columns.toSeq)
-      // MERGE semantics (the reference's WHEN MATCHED UPDATE): staged rows
-      // REPLACE internal rows sharing their primary key, so a chunk
-      // re-exported in update mode and promoted again lands exactly once.
-      // Normal-flow PKs are new — the anti-join drops nothing. The dir
-      // probe above already covers same-PK rows (same diaObjectId).
-      val objBase = objBase0.join(
-        broadcast(PpdbOps.localRows(spark, stagedPks, pkSchema)),
-        Seq("diaObjectId", "validityStartMjdTai"), "left_anti")
-      val stagedRows = stagedObj.select(internalObj.columns.map(col).toSeq: _*)
-      def patched(df: DataFrame) =
-        if (patch.isEmpty) df
-        else PpdbOps.mergePatch(df, PpdbOps.buildPatch(latest, objSpec),
-          objSpec)
-      val objRows = patched(
-        PpdbOps.fillValidityEnd(objBase, stagedRows, stagedIds))
-
-      // the snapshot rows: the snapshot dirs' out-of-scope rows carry
-      // over, the in-scope rows are replaced by the scope's new open
-      // intervals (an object whose interval closed simply disappears).
-      // snapNew holds the SCOPE's rows only — every staged row and the
-      // base rows of a staged or patched id: the probed dirs also carry
-      // out-of-scope rows that merely shared a dir with scoped ids, and
-      // those keep their existing snapshot rows via snapBase.
-      val snapNew = PpdbOps.latestSnapshot(patched(PpdbOps.fillValidityEnd(
-        objBase.join(broadcast(scopeIds), Seq("diaObjectId"), "left_semi"),
-        stagedRows, stagedIds)))
-      val snapBase =
-        if (snapProbe.dirs.isEmpty) emptyDf(snapNew.schema)
-        else catalog.readDirs(spark, snapProbe.dirs, snapNew.columns.toSeq)
-          .join(broadcast(scopeIds), Seq("diaObjectId"), "left_anti")
-      Seq(
-        Scoped("DiaObject", "internal.DiaObject", objProbe.dirs, objRows,
-          patch, objProbe.found, staged),
-        Scoped("DiaObjectLast", snapTable, snapProbe.dirs,
-          snapBase.unionByName(snapNew), Map.empty, Set.empty, Set.empty))
-    }
-
-    // fact tables: MERGE, not append — the dirs holding a row whose PK
-    // the staged delta carries (a re-promoted update-mode chunk) or a
-    // patched key are rewritten with same-PK rows replaced; everything
-    // else is the plain append. In the normal flow delta PKs are new:
-    // their ids lie outside every dir's zone map, no staged key reaches
-    // the driver, and an untouched table is a plain append.
-    def factChain(t: String) = () => {
-      val name = s"internal.$t"
-      val internal = catalog.read(spark, name)
-      val delta = catalog.read(spark, s"staging.$t").where(inChunks)
-        .drop("apdb_replica_chunk")
-        .select(internal.columns.map(col).toSeq: _*)
-      val spec = PpdbOps.mergeSpecs(t)
-      val keys = PpdbOps.keySchema(spec, internal.schema)
-      val patch = PpdbOps.patchKeys(spark, updateKeys, spec, keys)
-      val stagedKeys = PpdbOps.neededKeys(delta, keys,
-        catalog.mayHold(name, keys.head), patch)
-      val staged = stagedKeys.toSet
-      val probed = probe(name, keys, staged.map(_ -> false).toMap ++ patch)
-      val rows =
-        if (probed.dirs.isEmpty && patch.isEmpty) delta
-        else {
-          val base0 =
-            if (probed.dirs.isEmpty) emptyDf(internal.schema)
-            else catalog.readDirs(spark, probed.dirs, internal.columns.toSeq)
-          val merged = base0
-            .join(broadcast(PpdbOps.localRows(spark, stagedKeys, keys)),
-              spec.keys, "left_anti")
-            .unionByName(delta)
-          if (patch.isEmpty) merged
-          else PpdbOps.mergePatch(merged, PpdbOps.buildPatch(latest, spec),
-            spec)
-        }
-      Seq(Scoped(t, name, probed.dirs, rows, patch, probed.found, staged))
-    }
-
-    val scoped = graft.Concurrently.all(Seq(objectChain,
-      factChain("DiaSource"), factChain("DiaForcedSource"))).flatten
-
-    // J6: an update record targeting a row that was never promoted must
-    // ABORT the batch (mergePatch's left-outer join would silently drop
-    // it) — same contract the direct-store path enforces. Settled on the
-    // driver from what the probes found, in table order; starts no job.
-    scoped.filter(_.patch.nonEmpty).foreach { s =>
-      graft.Metrics.time("promote_validate_time", "table" -> s.label) {
-        PpdbOps.danglingKeys(s.patch, s.found, s.staged).headOption
-          .foreach { k =>
-            throw new IllegalStateException(
-              s"promote: update for missing ${s.label} row " + k.toString)
-          }
-      }
-    }
-    val writes = scoped.map { s =>
-      s.table -> TableDelta(dropDirs = s.affected.toSet,
-        appends = Seq(s.rows -> batchLabel))
-    }.toMap
+    // J9: the batch's staged rows MERGE into the internal tables, and
+    // the public snapshot (S14) is refreshed in the same scope: staged
+    // rows replace internal rows sharing their primary key, so a chunk
+    // re-exported in update mode and promoted again lands exactly once
+    val writes = ScopedMerge.plan(spark, catalog, "internal.",
+      t => catalog.read(spark, s"staging.$t").where(inChunks)
+        .drop("apdb_replica_chunk"),
+      Some(latest), updateKeys, Some("public.DiaObjectLast"),
+      replace = true, batchLabel)
 
     // S15: staged-row delete = DIRECTORY DROP of the promoted chunks'
     // labeled append dirs (metadata-only, no rewrite)
@@ -462,7 +310,7 @@ final class Promoter(spark: SparkSession, val catalog: VersionedCatalog,
     // probe scan per table (plus the broadcast of its keys), and one
     // footer schema-inference job per spark.read.parquet without a
     // schema (catalog reads, readDirs' per-dir scans)
-    graft.Metrics.time("promote_commit_time", batchTag) {
+    graft.Metrics.time("promote_commit_time", "batch" -> batchLabel) {
       catalog.commitAll(writes ++ stagingWrites ++ Map(
         "PpdbReplicaChunk" -> TableDelta(rewrite = Some(chunkTable))),
         Some(expected))
@@ -563,16 +411,4 @@ final class Promoter(spark: SparkSession, val catalog: VersionedCatalog,
         .unionByName(row)), Some(expected))
     ()
   }
-}
-
-object Promoter {
-
-  /** One output table's share of a promote: the dirs it replaces, the
-    * rows replacing them, and the inputs of its J6 check — the batch's
-    * patch keys (see [[PpdbOps.patchKeys]]), those the probe found and
-    * those the batch stages. `label` names the table in J6 errors.
-    */
-  private final case class Scoped(label: String, table: String,
-      affected: Seq[String], rows: DataFrame, patch: Map[Row, Boolean],
-      found: Set[Row], staged: Set[Row])
 }

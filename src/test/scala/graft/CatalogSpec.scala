@@ -24,6 +24,69 @@ class CatalogSpec extends SparkSpec {
     assert(cat.read(spark, "t").count() == 2)
   }
 
+  test("the pointer and history store dir names relative to the root: " +
+      "their bytes do not depend on the root path") {
+    import graft.catalog.TableDelta
+    val roots = Seq(tmpDir("c"), tmpDir("c-under-a-much-longer-root-path"))
+    assert(roots(0).length != roots(1).length)
+    val sizes = roots.map { root =>
+      val cat = new VersionedCatalog(root)
+      cat.commit(Map("a" -> Seq(1).toDF("x"), "b" -> Seq(1).toDF("x")))
+      cat.commitAll(Map("a" -> TableDelta(appends = Seq(Seq(2).toDF("x") -> "l"))))
+      // the in-memory dir strings are the paths the writes made
+      assert(cat.current._2.values.flatten.forall(_.startsWith(root + "/")))
+      assert(cat.read(spark, "a").as[Int].collect().sorted.toSeq == Seq(1, 2))
+      val meta = Paths.get(root, "_CURRENT") +:
+        cat.commits.map(c => Paths.get(root, "_commits", s"$c.json"))
+      assert(meta.forall(f => !new String(Files.readAllBytes(f)).contains(root)))
+      meta.map(Files.size)
+    }
+    assert(sizes(0) == sizes(1))
+  }
+
+  test("a catalog whose pointer and history hold absolute dir paths " +
+      "(written before relative names) still reads and time-travels") {
+    import graft.catalog.TableDelta
+    val root = tmpDir("legacy")
+    val cat = new VersionedCatalog(root)
+    val c1 = cat.commit(Map("t" -> Seq(1, 2).toDF("x")))
+    val at1 = cat.current
+    val c2 = cat.commitAll(Map("t" ->
+      TableDelta(appends = Seq(Seq(3).toDF("x") -> "l"))))
+    val at2 = cat.current
+    // rewrite pointer and history the old way: absolute paths, no flag
+    def legacy(state: (Long, Map[String, Seq[String]])) = {
+      val tables = state._2.map { case (t, ds) =>
+        s""""$t":${ds.map(d => s""""$d"""").mkString("[", ",", "]")}"""
+      }.mkString(",")
+      s"""{"commit":${state._1},"tables":{$tables}}""".getBytes
+    }
+    assert(at2._2("t").forall(d => Paths.get(d).isAbsolute))
+    Files.write(Paths.get(root, "_commits", s"$c1.json"), legacy(at1))
+    Files.write(Paths.get(root, "_commits", s"$c2.json"), legacy(at2))
+    Files.write(Paths.get(root, "_CURRENT"), legacy(at2))
+    val old = new VersionedCatalog(root)
+    assert(old.current == at2)
+    assert(old.read(spark, "t").as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
+    assert(old.readAt(spark, "t", c1).as[Int].collect().sorted.toSeq ==
+      Seq(1, 2))
+    assert(old.diff(spark, "t", c1, c2).select("change", "x").as[(String, Int)]
+      .collect().toSeq == Seq(("added", 3)))
+    // a commit on top writes relative names; the old dirs still resolve,
+    // history still reads both ways, and vacuum keeps every live dir
+    val c3 = old.commitAll(Map("t" ->
+      TableDelta(appends = Seq(Seq(4).toDF("x") -> "m"))))
+    assert(!new String(Files.readAllBytes(Paths.get(root, "_CURRENT")))
+      .contains(root))
+    assert(old.current._2("t").take(2) == at2._2("t"))
+    assert(old.readAt(spark, "t", c2).as[Int].collect().sorted.toSeq ==
+      Seq(1, 2, 3))
+    old.vacuum(retainCommits = 1)
+    assert(old.read(spark, "t").as[Int].collect().sorted.toSeq ==
+      Seq(1, 2, 3, 4))
+    assert(old.readAt(spark, "t", c3 - 1).count() == 3)
+  }
+
   test("multi-table commit is all-or-nothing for readers") {
     val cat = new VersionedCatalog(tmpDir("cat"))
     cat.commit(Map("a" -> Seq(1).toDF("x"), "b" -> Seq(1).toDF("x")))

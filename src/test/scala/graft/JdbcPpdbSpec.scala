@@ -314,8 +314,9 @@ class JdbcPpdbSpec extends SparkSpec {
     assertTablesEqual("initial replication", staged = true)
 
     // upsert parity: the source regenerates chunk 3 (doubled counters,
-    // new unique_id) — update-mode re-store must leave both backends
-    // identical again (same-PK replacement + re-applied patches)
+    // new unique_id) — update-mode re-store must leave all three backends
+    // identical again (same-PK replacement + re-applied patches); the
+    // staged backend re-exports, re-stages and re-promotes the chunk
     val c3 = chunks(3L)
     val mod = ChunkData(3L, "uuid-3b", c3.lastUpdateTimeUs,
       c3.diaObjects.withColumn("nDiaSources",
@@ -323,7 +324,10 @@ class JdbcPpdbSpec extends SparkSpec {
       c3.diaSources, c3.diaForcedSources, c3.updates)
     parquet.store(mod, update = true)
     jdbc.store(mod, update = true)
-    assertTablesEqual("after upsert re-store", staged = false)
+    new PpdbStaged(spark, promoter).store(mod, update = true)
+    promoter.stageChunks(Seq(3L))
+    assert(promoter.promote() == Seq(3L))
+    assertTablesEqual("after upsert re-store", staged = true)
   }
 
   test("duplicate-chunk race: concurrent writers resolve to exactly one copy") {

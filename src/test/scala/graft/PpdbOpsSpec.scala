@@ -104,15 +104,22 @@ class PpdbOpsSpec extends SparkSpec {
       "higher chunk wins over same time")
   }
 
+  /** `target` with `expanded`'s updates to `table` applied: LWW
+    * collapse, patch build, merge.
+    */
+  private def patched(target: DataFrame, expanded: DataFrame,
+      table: String): DataFrame = {
+    val spec = PpdbOps.mergeSpecs(table)
+    PpdbOps.mergePatch(target,
+      PpdbOps.buildPatch(PpdbOps.latestOnly(expanded), spec), spec)
+  }
+
   test("DiaObject merge: close validity + nDiaSources non-null rule") {
     val target = Seq(o(200001, 100.0, None, 5), o(200002, 100.0, None, 7)).toDF()
     val e = expanded(
       (0L, CloseDiaObjectValidity(t0, 4, 200001, 59580.0, None)),
       (0L, UpdateNDiaSources(t0, 5, 200002, 10)))
-    val merged = PpdbOps.applyUpdates(Map(
-      "DiaObject" -> target,
-      "DiaSource" -> Seq.empty[TestSrc].toDF(),
-      "DiaForcedSource" -> Seq.empty[TestFsrc].toDF()), e)("DiaObject")
+    val merged = patched(target, e, "DiaObject")
     val rows = merged.collect().map(r =>
       r.getLong(0) -> (Option(r.get(2)), r.getInt(6))).toMap
     assert(rows(200001L)._1.contains(59580.0))
@@ -129,10 +136,7 @@ class PpdbOpsSpec extends SparkSpec {
       (0L, ReassignDiaSourceToDiaObject(t0, 0, 100001, 300001)),
       (0L, ReassignDiaSourceToSSObject(t0, 1, 100002, 2001, 59580.0)),
       (0L, WithdrawDiaSource(t0, 2, 100003, 59580.0)))
-    val merged = PpdbOps.applyUpdates(Map(
-      "DiaObject" -> Seq.empty[TestObj].toDF(),
-      "DiaSource" -> target,
-      "DiaForcedSource" -> Seq.empty[TestFsrc].toDF()), e)("DiaSource")
+    val merged = patched(target, e, "DiaSource")
     val rows = merged.collect().map { r =>
       r.getLong(0) -> ((Option(r.get(3)), Option(r.get(4)),
         Option(r.get(7)), Option(r.get(9))))
@@ -150,10 +154,7 @@ class PpdbOpsSpec extends SparkSpec {
       TestFsrc(200001, 45.0, -30.0, 12345, 43, 60000.0, 0, 60000.0, None)).toDF()
     val e = expanded(
       (0L, WithdrawDiaForcedSource(t0, 3, 200001, 12345, 42, 59580.0)))
-    val merged = PpdbOps.applyUpdates(Map(
-      "DiaObject" -> Seq.empty[TestObj].toDF(),
-      "DiaSource" -> Seq.empty[TestSrc].toDF(),
-      "DiaForcedSource" -> target), e)("DiaForcedSource")
+    val merged = patched(target, e, "DiaForcedSource")
     val rows = merged.collect().map { r =>
       (r.getLong(0), r.getLong(3), r.getShort(4).toLong) -> Option(r.get(8))
     }.toMap

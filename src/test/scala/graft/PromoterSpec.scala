@@ -15,6 +15,9 @@ class PromoterSpec extends SparkSpec {
   /** Spark jobs of the steady-state one-chunk promote below. */
   private val JobCeiling = 55
 
+  /** Spark jobs of the steady-state one-chunk `PpdbSpark.store` below. */
+  private val StoreJobCeiling = 35
+
   private def fresh(): (Promoter, TestApdb) = {
     val cat = new VersionedCatalog(tmpDir("promo"))
     val p = new Promoter(spark, cat, tmpDir("export"))
@@ -249,10 +252,35 @@ class PromoterSpec extends SparkSpec {
     }
   }
 
+  /** The start times of the Spark jobs `body` runs, and the Metrics
+    * samples it records.
+    */
+  private def observed(body: => Unit): (Seq[Long], Seq[Metrics.Sample]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobTimes = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobTimes.add(e.time); ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    val samplesBefore = Metrics.snapshot().size
+    sc.addSparkListener(l)
+    try body
+    finally {
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(l)
+    }
+    (jobTimes.toArray.toSeq.map(_.asInstanceOf[Long]),
+      Metrics.snapshot().drop(samplesBefore))
+  }
+
+  // also the steady-state one-chunk PpdbSpark.store, which runs the
+  // same scoped merge
   test("a steady-state promote stays under its job ceiling and runs no " +
       "job inside the J6 check") {
     import graft.schema.UpdateRecord._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     // chunks 1 and 2 leave dirs in every table; chunk 3 re-observes the
     // objects and updates earlier rows of all three tables
     val apdb = new TestApdb(spark, nObjects = 6, nChunks = 3, Map(3L -> Seq(
@@ -266,34 +294,26 @@ class PromoterSpec extends SparkSpec {
       p.exportChunk(apdb.chunkData(id)); p.stageChunks(Seq(id))
       if (id < 3L) assert(p.promote() == Seq(id))
     }
-    val jobTimes = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobTimes.add(e.time); ()
+    val direct = new PpdbSpark(spark, new VersionedCatalog(tmpDir("ppdb")))
+    direct.init()
+    Seq(1L, 2L).foreach(id => direct.store(apdb.chunkData(id)))
+    val chunk3 = apdb.chunkData(3L)
+    // the counts these shapes run with the scope held on the driver; the
+    // bounds aggregates, distinct key shuffles and J6 replay queries it
+    // replaced would push them far above
+    for ((backend, ceiling, run) <- Seq(
+        ("Promoter", JobCeiling, () => assert(p.promote() == Seq(3L))),
+        ("PpdbSpark", StoreJobCeiling, () => direct.store(chunk3)))) {
+      val (jobs, samples) = observed(run())
+      assert(jobs.size <= ceiling, s"$backend: ${jobs.size} jobs")
+      val validations = samples.filter(_.metric == "promote_validate_time")
+      assert(validations.map(_.tags("table")).sorted ==
+        Seq("DiaForcedSource", "DiaObject", "DiaSource"), backend)
+      validations.foreach { v =>
+        val endMs = v.startMs + v.seconds * 1000
+        val inside = jobs.filter(t => t >= v.startMs && t < endMs)
+        assert(inside.isEmpty, s"$backend: jobs started inside $v: $inside")
       }
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerBusDrain(sc)
-    val samplesBefore = Metrics.snapshot().size
-    sc.addSparkListener(l)
-    try assert(p.promote() == Seq(3L))
-    finally {
-      org.apache.spark.ListenerBusDrain(sc)
-      sc.removeSparkListener(l)
-    }
-    val jobs = jobTimes.toArray.toSeq.map(_.asInstanceOf[Long])
-    // the count this promote shape runs with the scope held on the
-    // driver; the bounds aggregates, distinct key shuffles and J6 replay
-    // queries it replaced would push it far above
-    assert(jobs.size <= JobCeiling, s"${jobs.size} jobs")
-    val validations = Metrics.snapshot().drop(samplesBefore)
-      .filter(_.metric == "promote_validate_time")
-    assert(validations.map(_.tags("table")).sorted ==
-      Seq("DiaForcedSource", "DiaObject", "DiaSource"))
-    validations.foreach { v =>
-      val endMs = v.startMs + v.seconds * 1000
-      val inside = jobs.filter(t => t >= v.startMs && t < endMs)
-      assert(inside.isEmpty, s"jobs started inside $v: $inside")
     }
   }
 
