@@ -1,11 +1,28 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
 
-/** Per-round benchmark main: times every SparkEntry query on the scale
-  * factor in SPARK_GRAFT_SF_DIR and prints ONE JSON line
-  * {"metric":...,"value":total,"unit":"sec","queries":{...},"sf":...}.
+/** The one query-suite runner, over the scale factor in
+  * SPARK_GRAFT_SF_DIR on a `local[SPARK_GRAFT_CPUS]` session:
+  *
+  *   runMain graft.Bench
+  *     times every SparkEntry query and prints ONE JSON line
+  *     {"metric":...,"value":total,"unit":"sec","queries":{...},"sf":...}
+  *     plus a compact variant, and writes BENCH_LOCAL[_QUIET].json
+  *   runMain graft.Bench <query>...
+  *     runs the same loop over the named queries only and prints one line
+  *     per query per rep: wall, jobs, stages, tasks, shuffle write/read
+  *     records and bytes (host-independent, so before/after compares of
+  *     them are exact where walls swing 2-4x with host load)
+  *   runMain graft.Bench --explain <outDir> <suffix> [query...]
+  *     writes each query's pre-execution formatted plan
+  *     (isFinalPlan=false) to <outDir>/<query>_<suffix>.txt, all queries
+  *     when none are named
+  *
+  * Both timing modes run SPARK_GRAFT_BENCH_REPS passes (default 2).
   */
 object Bench {
 
@@ -21,45 +38,182 @@ object Bench {
     if (r.isNullAt(0)) 0L else r.getLong(0)
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** The session every sf main runs on: `local[cpus]` with one shuffle
+    * partition per core, AQE on, UTC, no UI.
+    */
+  def session(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
-    // warm the JVM/codegen paths once so the first timed query doesn't
-    // absorb all of Spark's startup cost
+  /** The run's environment: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS and
+    * SPARK_GRAFT_BENCH_REPS.
+    */
+  final case class Settings(sfDir: String, cpus: Int, reps: Int)
+
+  def settings: Settings = Settings(
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+    sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1))
+
+  sealed trait Mode
+  case object Suite extends Mode
+  final case class Named(names: Seq[String]) extends Mode
+  final case class Explain(outDir: String, suffix: String,
+      names: Seq[String]) extends Mode
+
+  private val usage = "usage: Bench [<query>... | --explain <outDir> <suffix> [query...]]"
+
+  /** The mode `args` select; an unknown query name or a short
+    * `--explain` fails here, before any session exists.
+    */
+  def parse(args: Seq[String]): Mode = {
+    def known(names: Seq[String]): Seq[String] = {
+      val unknown = names.filterNot(SparkEntry.queries.keySet)
+      if (unknown.nonEmpty) throw new IllegalArgumentException(
+        s"unknown query: ${unknown.mkString(", ")}")
+      names
+    }
+    args match {
+      case Seq() => Suite
+      case "--explain" +: outDir +: suffix +: names =>
+        Explain(outDir, suffix, known(names))
+      case "--explain" +: _ =>
+        throw new IllegalArgumentException("--explain needs <outDir> <suffix>")
+      case names => Named(known(names))
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val mode =
+      try parse(args.toSeq)
+      catch { case e: IllegalArgumentException =>
+        System.err.println(s"${e.getMessage}\n$usage")
+        sys.exit(2)
+      }
+    val s = settings
+    val spark = session(s.cpus)
+    try run(spark, mode, s, println)
+    finally spark.stop()
+  }
+
+  /** Run `mode` on `spark`, printing through `out`. */
+  def run(spark: SparkSession, mode: Mode, s: Settings,
+      out: String => Unit): Unit = mode match {
+    case Suite => suite(spark, s, out)
+    case Named(names) => named(spark, names, s, out)
+    case Explain(outDir, suffix, names) =>
+      explain(spark, outDir, suffix, names, s.sfDir, out)
+  }
+
+  /** The timing loop both modes share. A warm-up (JVM/codegen paths, so
+    * the first timed query doesn't absorb all of Spark's startup cost),
+    * then `warmed()`, then `reps` INTERLEAVED passes over `names`: the
+    * whole list runs `reps` times, so a multi-second contention window
+    * on the host degrades at most one pass's sample of a query, not all
+    * of them (back-to-back reps of the same query share the same window;
+    * observed as a 22 s dd2b in an otherwise ~2 s build). Each run is
+    * forced, then persisted intermediates are dropped so one query's
+    * cache can't squeeze the execution memory of the queries after it,
+    * then `onRun(name, rep, secs)` sees it — secs is −1 if the run
+    * failed.
+    */
+  def loop(spark: SparkSession, sfDir: String, names: Seq[String],
+      reps: Int, warmed: () => Unit)(
+      onRun: (String, Int, Double) => Unit): Unit = {
+    val queries = SparkEntry.queries
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    try force(SparkEntry.queries.head._2(spark, sfDir))
+    try force(queries.head._2(spark, sfDir))
     catch { case _: Throwable => () }
+    warmed()
+    for (rep <- 1 to reps; name <- names) {
+      val fn = queries(name)
+      val t0 = System.nanoTime()
+      val ok = try { force(fn(spark, sfDir)); true }
+        catch { case _: Throwable => false }
+      val dt = (System.nanoTime() - t0) / 1e9
+      spark.catalog.clearCache()
+      onRun(name, rep, if (ok) dt else -1.0)
+    }
+  }
 
+  /** Job-shape counters since the last `take()`. */
+  private final class Counters extends SparkListener {
+    private val names = Seq("jobs", "stages", "tasks", "shuf_w_recs",
+      "shuf_w_bytes", "shuf_r_recs", "shuf_r_bytes")
+    private val c = new java.util.concurrent.atomic.AtomicLongArray(7)
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = c.incrementAndGet(0)
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      c.incrementAndGet(1)
+      c.addAndGet(2, e.stageInfo.numTasks.toLong)
+      val m = e.stageInfo.taskMetrics
+      if (m != null) {
+        c.addAndGet(3, m.shuffleWriteMetrics.recordsWritten)
+        c.addAndGet(4, m.shuffleWriteMetrics.bytesWritten)
+        c.addAndGet(5, m.shuffleReadMetrics.recordsRead)
+        c.addAndGet(6, m.shuffleReadMetrics.totalBytesRead)
+      }
+    }
+    /** `jobs=… stages=… …`, then zero */
+    def take(): String = names.zipWithIndex
+      .map { case (n, i) => s"$n=${c.getAndSet(i, 0L)}" }.mkString(" ")
+  }
+
+  private def named(spark: SparkSession, names: Seq[String], s: Settings,
+      out: String => Unit): Unit = {
+    val sc = spark.sparkContext
+    val counters = new Counters
+    // every event of a run's jobs is posted before its action returns;
+    // draining the bus delivers them all to the counters (and, before
+    // the first run, keeps the warm-up's out of them)
+    def drain(): Unit = org.apache.spark.ListenerBusDrain(sc)
+    try loop(spark, s.sfDir, names, s.reps,
+        () => { drain(); sc.addSparkListener(counters) }) { (name, rep, dt) =>
+      drain()
+      out(f"BENCH $name%-34s rep$rep%d wall_s=$dt%.3f ${counters.take()}")
+    }
+    finally sc.removeSparkListener(counters)
+  }
+
+  /** Query construction may run eager build jobs (chain bounds, band
+    * stats, IVF training) exactly as the timed run pays them; the plan
+    * written is the pre-execution plan (AQE isFinalPlan=false).
+    */
+  private def explain(spark: SparkSession, outDir: String, suffix: String,
+      names: Seq[String], sfDir: String, out: String => Unit): Unit = {
+    val dir = java.nio.file.Paths.get(outDir)
+    java.nio.file.Files.createDirectories(dir)
+    val all = if (names.nonEmpty) names else SparkEntry.queries.keys.toSeq.sorted
+    all.foreach { n =>
+      val plan = SparkEntry.queries(n)(spark, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      java.nio.file.Files.writeString(dir.resolve(s"${n}_$suffix.txt"), plan)
+      spark.catalog.clearCache()
+      out(s"wrote $n")
+    }
+  }
+
+  private def suite(spark: SparkSession, s: Settings,
+      out: String => Unit): Unit = {
     // calibrate BEFORE the timed loop (and again after): the pair
     // brackets the host's delivered CPU across the run, and the mean is
     // what the normalized walls divide by. Thread count follows the
     // session's actual parallelism, never a hardcoded 32 — on a
     // different host the key name and value must describe that host.
-    val nThreads = cpus.toInt
-    val calibStart = HostCalib.measure(nThreads)
-    var calibEnd = -1.0 // measured after the loop
+    var calibStart: HostCalib.Calib = null
 
     // Multiple runs per query, keep the fastest: a single run is hostage
     // to transient host load (observed 2-4x swings between rounds on an
-    // otherwise identical build). The reps are INTERLEAVED — the full
-    // suite runs `reps` times and each query keeps its min across passes —
-    // so a multi-second contention window on the host degrades at most one
-    // pass's sample of a query, not all of them (back-to-back reps of the
-    // same query share the same window and min-of-2 then measures the
-    // contention, not the work; observed as a 22 s dd2b in an otherwise
-    // ~2 s build). A failed run poisons the query's time to a negative
-    // sentinel.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
+    // otherwise identical build). A failed run poisons the query's time
+    // to a negative sentinel.
+    val names = SparkEntry.queries.keys.toSeq.sorted
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
     // record host load around the run: apparent cross-round regressions
     // have repeatedly been pure host contention (same binaries, 1.1-1.5x
@@ -68,21 +222,18 @@ object Bench {
     def loadAvg: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
-    val loadStart = loadAvg
-    var loadPeak = loadStart
-    for (_ <- 1 to reps; (name, fn) <- names) {
-      val t0 = System.nanoTime()
-      val ok = try { force(fn(spark, sfDir)); true }
-        catch { case _: Throwable => false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // drop persisted intermediates so one query's cache can't squeeze
-      // the execution memory of the queries after it
-      spark.catalog.clearCache()
-      samples(name) = (if (ok) dt else -1.0) :: samples.getOrElse(name, Nil)
+    var loadStart = 0.0
+    var loadPeak = 0.0
+    loop(spark, s.sfDir, names, s.reps, { () =>
+      calibStart = HostCalib.measure(s.cpus)
+      loadStart = loadAvg
+      loadPeak = loadStart
+    }) { (name, _, dt) =>
+      samples(name) = dt :: samples.getOrElse(name, Nil)
       loadPeak = math.max(loadPeak, loadAvg)
     }
-    calibEnd = HostCalib.mops(nThreads)
-    val results = names.map { case (name, _) =>
+    val calibEnd = HostCalib.mops(s.cpus)
+    val results = names.map { name =>
       val times = samples(name)
       name -> (if (times.exists(_ < 0)) -1.0 else times.min)
     }
@@ -114,14 +265,14 @@ object Bench {
     val loadJson = s""""load_avg_start":${f(loadStart)},""" +
       s""""load_avg_peak":${f(loadPeak)},"load_avg_end":${f(loadAvg)},""" +
       calibStart.json +
-      s""","host_mops_${nThreads}t_end":""" +
+      s""","host_mops_${s.cpus}t_end":""" +
       "%.1f".formatLocal(java.util.Locale.ROOT, calibEnd) +
       s""","ref_mops":${f(RefMops)},"norm_factor":${f(normFactor)}"""
     val line =
       s"""{"metric":"total","value":${f(total)},"unit":"sec",""" +
         s""""value_norm":${f(norm(total))},$loadJson,"queries":$qs,""" +
-        s""""queries_norm":$qsNorm,"sf":"$sfDir"}"""
-    println(line)
+        s""""queries_norm":$qsNorm,"sf":"${s.sfDir}"}"""
+    out(line)
     // ALSO persist to a file: the driver's stdout capture keeps only a
     // bounded tail, so the printed line alone can be lost mid-stream
     try java.nio.file.Files.writeString(
@@ -166,8 +317,7 @@ object Bench {
       s""""n_queries":${results.size},"queries_kept":$kept,""" +
       s""""queries_full":"BENCH_LOCAL.json",""" +
       s""""queries":${picked.result().mkString("{", ",", "}")},""" +
-      s""""sf":"$sfDir"}"""
-    println(compact)
-    spark.stop()
+      s""""sf":"${s.sfDir}"}"""
+    out(compact)
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.catalog.VersionedCatalog
@@ -31,17 +31,9 @@ object BenchScale {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val Bench.Settings(sfDir, cpus, _) = Bench.settings
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(cpus)
 
     val shuffleTally = new java.util.concurrent.atomic.AtomicLong
     // monotone task-end counter: the drain criterion. Draining on
@@ -104,7 +96,7 @@ object BenchScale {
     // build wall move 6.6× between rounds at IDENTICAL shuffle records
     // with only an end-of-run calibration to arbitrate), so the pair
     // brackets the window every early case ran in
-    val calibStart = HostCalib.measure(cpus.toInt)
+    val calibStart = HostCalib.measure(cpus)
     System.err.println(f"[scale] host calib start: " +
       f"1t ${calibStart.mops1t}%.0f Mops, ${cpus}t " +
       f"${calibStart.mopsNt}%.0f Mops")
@@ -332,7 +324,7 @@ object BenchScale {
         "vec_id", "embedding",
         graft.ops.Similarity.ivfTrain(emb, "vec_id", "embedding", k = 64,
           iters = 2, trainLimit = Some(8192)),
-        threshold = 0.9, kernelAssign = true, probes = 2,
+        threshold = 0.9, probes = 2,
         maxCellRows = Some(8192))),
       // the PRODUCTION cell sizing next to the fixed-k comparability row
       // above: k = sqrt(n) (semDedupCellCount) bounds the in-cell
@@ -660,7 +652,7 @@ object BenchScale {
         "embedding",
         graft.ops.Similarity.ivfTrain(emb, "vec_id", "embedding", k,
           iters = 2, trainLimit = Some(trainLimit)),
-        threshold = 0.9, kernelAssign = true, probes = 2)
+        threshold = 0.9, probes = 2)
       val perFam = kept
         .select(expr(s"vec_id div $factor").as("grp"))
         .groupBy(col("grp")).agg(count(lit(1)).as("kept"))
@@ -1054,7 +1046,7 @@ object BenchScale {
     // arbitration (the r16 766 s-vs-230 s build episode); the bracket is
     // coarse for a multi-hour run, but each case at least carries the
     // run-level delivery context explicitly.
-    val calibEnd = HostCalib.mops(cpus.toInt)
+    val calibEnd = HostCalib.mops(cpus)
     val RefMops = 15500.0
     val calibMean =
       if (calibStart.mopsNt > 0 && calibEnd > 0)

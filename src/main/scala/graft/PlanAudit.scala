@@ -1,16 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-quality audit: prints `explain(formatted)` for representative
   * queries and checks the properties that matter at 100 TB — filters and
   * projections reaching the parquet scan, small dims broadcast, windows
   * partitioned on their keys, custom expressions staying inside
   * whole-stage codegen.
   *
-  * Usage: runMain graft.PlanAudit [sfDir] [queryName ...]
-  * With no query names, audits a representative subset and exits non-zero
-  * on any failed property.
+  * Usage: runMain graft.PlanAudit [sfDir]
+  * Audits a representative subset and exits non-zero on any failed
+  * property. A query's full plan on the same session:
+  * SPARK_GRAFT_CPUS=8 SPARK_GRAFT_SF_DIR=<sfDir> runMain graft.Bench
+  * --explain <outDir> <suffix> <query>.
   */
 object PlanAudit {
 
@@ -21,15 +21,27 @@ object PlanAudit {
     * pre-encode scalar tuples (id + dims/params) — the property the mm
     * spread claims ("payloads never shuffle"): a regression that
     * round-robins post-encode media bytes would show the generated
-    * payload column in the exchange's Input list and fail here.
+    * payload column in the exchange's Input list and fail here. Every
+    * RoundRobinPartitioning in the plan must be one the pattern reads,
+    * so a formatting drift fails instead of passing over zero matches.
     */
-  private def roundRobinPreEncodeOnly(p: String): Boolean =
-    "(?m)^\\(\\d+\\) Exchange\\nInput \\[\\d+\\]: \\[([^\\]]*)\\]\\nArguments: RoundRobinPartitioning".r
-      .findAllMatchIn(p).forall { m =>
+  private[graft] def roundRobinPreEncodeOnly(p: String): Boolean = {
+    val exchanges =
+      "(?m)^\\(\\d+\\) Exchange\\nInput \\[\\d+\\]: \\[([^\\]]*)\\]\\nArguments: RoundRobinPartitioning".r
+        .findAllMatchIn(p).toSeq
+    exchanges.size == "RoundRobinPartitioning".r.findAllIn(p).size &&
+      exchanges.forall { m =>
         m.group(1).split(",").map(_.trim).forall(c =>
           "^(doc_id|vec_id|w|h|sr|n|nf|dur|secs|seed|fps|ch|rate|len)#\\d+L?$"
             .r.findFirstIn(c).isDefined)
       }
+  }
+
+  /** no Sort node: the formatted plan names nodes `(N) Sort` (the tree
+    * lines carry no class names such as SortExec)
+    */
+  private[graft] def noSort(p: String): Boolean =
+    "(?m)^\\(\\d+\\) Sort$".r.findFirstIn(p).isEmpty
 
   /** the plan joins with a hash/merge equi-join, never a nested loop */
   private def isEquiJoin(p: String): Boolean =
@@ -94,7 +106,7 @@ object PlanAudit {
       "weighted draw is map-only into TakeOrderedAndProject (k-row " +
         "heaps, no corpus shuffle, no full sort)",
       p => p.contains("TakeOrderedAndProject") && !p.contains("Exchange") &&
-        !p.contains("SortExec")),
+        noSort(p)),
     Check("a8_heavy_hitters", "raw keys never shuffle; one sketch exchange",
       p => "ObjectHashAggregate".r.findAllIn(p).size >= 2 &&
         "(?m)^\\s*(\\+-|:-)? *Exchange".r.findAllIn(p).size == 1),
@@ -201,19 +213,19 @@ object PlanAudit {
     Check("mm4_audio_windows",
       "overlapping-window explode is partition-local (map-only, no " +
         "shuffle, no sort)",
-      p => !p.contains("Exchange") && !p.contains("SortExec")),
+      p => !p.contains("Exchange") && noSort(p)),
     Check("mm6_image_decode",
       "render + real ImageIO decode is one map pass over the spread " +
         "dims rows: the only exchange is the scale-adaptive round-robin " +
         "spread of the pre-encode (id, dims) tuples — media payloads " +
         "never shuffle, and no hash exchange or sort appears",
-      p => !p.contains("Exchange hashpartitioning") &&
-        !p.contains("SortExec") &&
-        "Exchange RoundRobinPartitioning".r.findAllIn(p).size <= 1 &&
+      p => !p.contains("hashpartitioning") &&
+        noSort(p) &&
+        "RoundRobinPartitioning".r.findAllIn(p).size <= 1 &&
         roundRobinPreEncodeOnly(p)),
     Check("mm5_feature_argmax",
       "feature extraction + summary is map-only (no shuffle)",
-      p => !p.contains("Exchange") && !p.contains("SortExec")),
+      p => !p.contains("Exchange") && noSort(p)),
     Check("q16_drift_report",
       "both snapshot profiles aggregate sketches (rows never shuffle " +
         "past the partial agg); the side join runs on the " +
@@ -224,8 +236,8 @@ object PlanAudit {
       "trained-model scoring is map-only over the cached features (no " +
         "row shuffle in the returned plan; training runs as one global " +
         "agg per round with map-side partials, off-plan)",
-      p => !p.contains("Exchange hashpartitioning") &&
-        !p.contains("SortExec")),
+      p => !p.contains("hashpartitioning") &&
+        noSort(p)),
     Check("a13_kmv_overlap",
       "per-group KMV sketches aggregate partial map-side; the pairwise " +
         "probe joins only the group-cardinality sketch table",
@@ -252,7 +264,7 @@ object PlanAudit {
       "SQ8 probe scans the code table only — no join of any kind, " +
         "decode+distance in projection, top-k without a full sort",
       p => p.contains("TakeOrderedAndProject") && !p.contains("Join") &&
-        !p.contains("Exchange hashpartitioning")),
+        !p.contains("hashpartitioning")),
     Check("ts30_dsir_select",
       "DSIR scoring: bigrams equi-join both frozen LM tables, " +
         "selection is a global TakeOrdered — never a nested loop, " +
@@ -271,7 +283,7 @@ object PlanAudit {
       "blocklist scan is one map-only automaton pass (no shuffle, no " +
         "sort, codegen'd blocklist_hits)",
       p => p.contains("blocklist_hits") && !p.contains("Exchange") &&
-        !p.contains("SortExec")),
+        noSort(p)),
     Check("g3_kcore",
       "delta peel: the returned plan reads the truncated cached " +
         "maintained-degree table (no join, no re-aggregation), never " +
@@ -309,7 +321,7 @@ object PlanAudit {
       "blocklist scrub is one map-only automaton pass (no shuffle, no " +
         "sort, codegen'd blocklist_scrub)",
       p => p.contains("blocklist_scrub") && !p.contains("Exchange") &&
-        !p.contains("SortExec")),
+        noSort(p)),
     Check("dd21_cdc_dedup",
       "CDC: codegen chunking explodes map-side and the chunk TEXT is " +
         "hashed away before any exchange — both shuffles (per-doc " +
@@ -320,45 +332,30 @@ object PlanAudit {
     Check("mm12_image_resize",
       "render + resize + re-decode is one map pass over the spread dims " +
         "(round-robin of pre-encode tuples only; payloads never shuffle)",
-      p => !p.contains("Exchange hashpartitioning") &&
-        !p.contains("SortExec") &&
-        "Exchange RoundRobinPartitioning".r.findAllIn(p).size <= 1 &&
+      p => !p.contains("hashpartitioning") &&
+        noSort(p) &&
+        "RoundRobinPartitioning".r.findAllIn(p).size <= 1 &&
         roundRobinPreEncodeOnly(p)),
     Check("mm13_audio_decimate",
       "synthesize + decimate + re-decode is one map pass over the " +
         "spread dims (round-robin of pre-encode tuples only; payloads " +
         "never shuffle)",
-      p => !p.contains("Exchange hashpartitioning") &&
-        !p.contains("SortExec") &&
-        "Exchange RoundRobinPartitioning".r.findAllIn(p).size <= 1 &&
+      p => !p.contains("hashpartitioning") &&
+        noSort(p) &&
+        "RoundRobinPartitioning".r.findAllIn(p).size <= 1 &&
         roundRobinPreEncodeOnly(p)),
     Check("mm14_channel_stats",
       "render + decode + channel sums is one map pass over the spread " +
         "dims (round-robin of pre-encode tuples only; payloads never " +
         "shuffle)",
-      p => !p.contains("Exchange hashpartitioning") &&
-        !p.contains("SortExec") &&
-        "Exchange RoundRobinPartitioning".r.findAllIn(p).size <= 1 &&
+      p => !p.contains("hashpartitioning") &&
+        noSort(p) &&
+        "RoundRobinPartitioning".r.findAllIn(p).size <= 1 &&
         roundRobinPreEncodeOnly(p)))
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = args.drop(1)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    if (names.nonEmpty) {
-      names.foreach { n =>
-        println(s"\n========== $n ==========")
-        SparkEntry.queries(n)(spark, sfDir).explain("formatted")
-      }
-      spark.stop(); return
-    }
+    val spark = Bench.session(8)
 
     var failed = 0
     checks.groupBy(_.query).toSeq.sortBy(_._1).foreach { case (q, cs) =>
@@ -476,52 +473,6 @@ object PlanAudit {
       println(f"${if (ok) "OK  " else "FAIL"}  ${"pagerank_round"}%-22s " +
         s"pinned adjacency removes the per-round edge shuffle " +
         s"($pinned vs $plain round shuffles)")
-      spark.catalog.clearCache()
-    }
-    // PlanBridge partitioning carry: a truncated round-state leaf must
-    // REPORT the hash layout its rows actually have (under AQE the
-    // executedPlan is AdaptiveSparkPlanExec, which hides the final
-    // plan's partitioning — the r17 dumps showed UnknownPartitioning on
-    // every truncated leaf), and a same-key aggregate over the leaf must
-    // plan ZERO new exchanges
-    {
-      import spark.implicits._
-      import org.apache.spark.sql.functions.{col, sum => fsum}
-      val state = (1L to 1000L).map(i => (i % 97, i)).toDF("k", "v")
-        .groupBy(col("k")).agg(fsum(col("v")).as("s"))
-      val t = org.apache.spark.sql.graftbridge.PlanBridge
-        .truncated(state, carryPartitioning = true)
-      val leafPart = t.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.outputPartitioning
-      }.orNull
-      val hashExprs = leafPart match {
-        case h: org.apache.spark.sql.catalyst.plans.physical
-            .HashPartitioning => h.expressions
-        case c: org.apache.spark.sql.catalyst.plans.physical
-            .CoalescedHashPartitioning => c.from.expressions
-        case _ => Nil
-      }
-      val okLeaf =
-        hashExprs.flatMap(_.references.toSeq).map(_.name) == Seq("k")
-      val saved = Seq("spark.sql.adaptive.enabled")
-        .map(k => k -> spark.conf.get(k))
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val roundEx = try {
-        t.groupBy(col("k")).agg(fsum(col("s")).as("s2"))
-          .queryExecution.executedPlan.collect {
-            case e: org.apache.spark.sql.execution.exchange
-                .ShuffleExchangeExec => e
-          }.size
-      } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
-      val ok = okLeaf && roundEx == 0
-      if (!ok) {
-        failed += 1
-        println(s"truncated leaf partitioning=$leafPart, " +
-          s"same-key re-aggregate exchanges=$roundEx")
-      }
-      println(f"${if (ok) "OK  " else "FAIL"}  ${"planbridge_carry"}%-22s " +
-        "truncated leaf keeps hash layout; same-key round adds 0 exchanges")
       spark.catalog.clearCache()
     }
     // catalog fact-table layout: a time-range read over bucketed appends

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{IvfPqCellPackedIndex, IvfPqIndex, IvfPqSharedPackedIndex,
   PqPackedIndex, ScaleStress, Similarity}
@@ -20,17 +20,9 @@ import graft.ops.{IvfPqCellPackedIndex, IvfPqIndex, IvfPqSharedPackedIndex,
 object RecallLab {
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val Bench.Settings(sfDir, cpus, _) = Bench.settings
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(cpus)
 
     val emb = ScaleStress.inflateEmbeddings(
       Tables.embeddings(spark, sfDir), factor).cache()

@@ -262,8 +262,8 @@ case class NearestCentroidIds(child: Expression, cents: CentroidsLocal,
     copy(child = c)
 }
 
-/** All m PQ codes of a vector in one pass — the kernel twin of
-  * [[graft.ops.Similarity.pqEncode]]: per subspace j the code minimizing
+/** All m PQ codes of a vector in one pass
+  * ([[graft.ops.Similarity.pqEncodePacked]]): per subspace j the code minimizing
   * |c|² − 2·v_j·c (the |v_j|² term is constant under the argmin), NaN
   * scores lose (Spark's NaN-greatest ordering), ties to the LOWEST code
   * id. Returns array<long> of length m in subspace order.

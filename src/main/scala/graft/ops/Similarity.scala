@@ -329,8 +329,8 @@ object Similarity {
     val train = cached.getOrElse(df)
     var codebooks = pqSpreadSeedCodebooks(train, idCol, vecCol, m, dims, ksub)
     for (_ <- 0 until iters) {
-      // nearest codeword per (vector, subspace) via the kernel twin of
-      // [[pqEncode]] (identical argmin over the collected m·ksub-row
+      // nearest codeword per (vector, subspace) via the PQ encode
+      // kernel (the same argmin over the collected m·ksub-row
       // codebooks, all m subspaces in one map-only pass) — the
       // n·m·ksub-row join materialization and its argmin shuffle
       // disappear, and each iteration's plan restarts from `train` plus
@@ -370,32 +370,6 @@ object Similarity {
     local.ids.indices.flatMap(j => local.ids(j).indices.map(kk =>
         (j, local.ids(j)(kk), local.vecs(j)(kk).toSeq)))
       .toDF("sub", "centroid_id", "centroid")
-  }
-
-  /** PQ-encode the corpus: per (vector, subspace), the codebook entry
-    * minimizing squared L2 distance — computed as |c|² − 2·v_j·c (the
-    * |v_j|² term is constant under the argmin), all dot products in the
-    * reproducible ordered fold. One broadcast join + one
-    * map-side-combining argmin shuffle (same shape as [[assign]]); no
-    * window. Returns (id, sub, code) — `m` rows per vector, 24 bytes
-    * each, the compressed representation probes scan INSTEAD of the
-    * full vectors.
-    */
-  def pqEncode(df: DataFrame, idCol: String, vecCol: String,
-      codebooks: DataFrame, m: Int, dims: Int): DataFrame = {
-    val sd = dims / m
-    df.select(col(idCol),
-        explode(array((0 until m).map(j =>
-          struct(lit(j).as("sub"),
-            slice(col(vecCol), j * sd + 1, sd).as("v"))): _*)).as("sv"))
-      .select(col(idCol), col("sv.sub").as("sub"), col("sv.v").as("v"))
-      .join(broadcast(codebooks), Seq("sub"))
-      .select(col(idCol), col("sub"), col("centroid_id"),
-        (dot(col("centroid"), col("centroid"))
-          - lit(2.0) * dot(col("v"), col("centroid"))).as("score"))
-      .groupBy(col(idCol), col("sub"))
-      .agg(min(struct(col("score"), col("centroid_id"))).as("best"))
-      .select(col(idCol), col("sub"), col("best.centroid_id").as("code"))
   }
 
   /** Asymmetric-distance (ADC) top-k over PQ codes: the query stays
@@ -620,7 +594,7 @@ object Similarity {
     * element, and (b) CollapseProject can never fuse the steps back into
     * the nested O(dims³) tree. The barrier is an RDD leaf — recompute-
     * correct, no persist to leak — and downstream multi-references
-    * (pqEncode's m slices) re-read a computed array, not the fold.
+    * (the PQ encoder's m slices) re-read a computed array, not the fold.
     */
   def rotated(df: DataFrame, vecCol: String, us: Seq[Array[Double]])
       : DataFrame = {
@@ -839,25 +813,14 @@ object Similarity {
     math.min(65536L, math.max(64L, math.round(math.sqrt(n.toDouble)))).toInt
 
   def semDedup(df: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, threshold: Double,
-      kernelAssign: Boolean = false, probes: Int = 1,
+      centroids: DataFrame, threshold: Double, probes: Int = 1,
       maxCellRows: Option[Int] = None): DataFrame = {
     require(probes >= 1, s"need at least one probe cell, got $probes")
     require(maxCellRows.forall(_ >= 2),
       s"maxCellRows must be >= 2, got $maxCellRows")
-    // kernelAssign: evaluate the cell argmax through the map-only
-    // kernel twin (bit-identical, spec-pinned) instead of the
-    // crossJoin + argmax shuffle — the at-scale choice; the library
-    // default keeps the relational oracle-replayable form (the dd17/
-    // dd17e GATE queries pass kernelAssign = true since r18: identical
-    // rows, and the probes == 1 kernel path below is one projection
-    // with no join at all)
-    lazy val assigned =
-      if (kernelAssign || probes > 1)
-        assignFast(df, idCol, vecCol, centroids)
-      else assign(df, idCol, vecCol, centroids)
-    lazy val cells = df.select(col(idCol), col(vecCol))
-      .join(assigned, Seq(idCol))
+    // cells come from the map-only argmax kernel ([[assignFast]],
+    // bit-identical to the relational [[assign]], spec-pinned)
+    val local = collectCentroids(centroids)
     // probes > 1: the pair scan runs over each vector's `probes` nearest
     // cells instead of only the argmax cell, so a clone family straddling
     // a Lloyd boundary (the measured ×30 one_kept_frac dip: two
@@ -867,32 +830,26 @@ object Similarity {
     // generation widens (×probes join input; pairs seen through two
     // shared cells dedup in the DISTINCT below). probes=1 keeps the
     // exact dd17-gated plan.
-    // persisted: the assign subtree (crossJoin + argmax window on the
-    // relational path) is the expensive stage, and sides feeds the pair
-    // scan TWICE (both join sides) plus — under the cell guard — the
-    // bucket-count aggregate; uncached, one action re-ran assign 4×
-    // (measured r17: dd17e was the most expensive untouched query)
+    // persisted: sides feeds the pair scan TWICE (both join sides) plus
+    // — under the cell guard — the bucket-count aggregate; uncached, one
+    // action re-ran the cell assignment 4× (measured r17: dd17e was the
+    // most expensive untouched query)
     val sides = graft.ops.Dedup.trackExisting((
-      if (probes == 1 && kernelAssign) {
+      if (probes == 1)
         // the whole pair-scan input is ONE projection: kernel argmax
         // inline, no crossJoin, no join-back of the vectors
-        val local = collectCentroids(centroids)
         df.select(col(idCol).as("id"),
           graft.functions.QuantKernelCols
             .nearestCentroid(col(vecCol), local).as("centroid_id"),
           col(vecCol).as("v"), norm(col(vecCol)).as("nrm"))
-      } else if (probes == 1)
-        cells.select(col(idCol).as("id"), col("centroid_id"),
-          col(vecCol).as("v"), norm(col(vecCol)).as("nrm"))
-      else {
-        val local = collectCentroids(centroids)
+      else
         df.select(col(idCol).as("id"), col(vecCol).as("v"),
             norm(col(vecCol)).as("nrm"),
             explode(graft.functions.QuantKernelCols
               .nearestCentroids(col(vecCol), local, probes))
               .as("centroid_id"))
           .select(col("id"), col("centroid_id"), col("v"), col("nrm"))
-      }).persist())
+      ).persist())
     val dropped = (maxCellRows match {
       case None =>
         sides.as("a").join(sides.as("b"),
@@ -962,13 +919,13 @@ object Similarity {
             col("a.nrm"), col("b.nrm")) >= threshold)
           .select(greatest(col("a.id"), col("b.id")).as(idCol))
     }).distinct()
-    // probes == 1: sides IS cells plus the norm column — derive the kept
-    // set from the cached frame instead of re-running the assign subtree
-    // a second time through cells. probes > 1 must keep cells (sides is
-    // exploded per probe cell; the output keeps the PRIMARY argmax cell).
+    // probes == 1: sides IS the cell assignment plus the norm column —
+    // derive the kept set from the cached frame. probes > 1 re-assigns
+    // (sides is exploded per probe cell; the output keeps the PRIMARY
+    // argmax cell).
     val kept =
       if (probes == 1) sides.select(col("id").as(idCol), col("centroid_id"))
-      else cells
+      else assignFast(df, idCol, vecCol, centroids)
     kept.join(dropped, Seq(idCol), "left_anti")
       .select(col(idCol), col("centroid_id"))
   }
@@ -997,8 +954,7 @@ object Similarity {
     val k = semDedupCellCount(n)
     val centroids = ivfTrain(df, idCol, vecCol, k, iters = trainIters,
       trainLimit = Some(math.max(8192, 32 * k)))
-    semDedup(df, idCol, vecCol, centroids, threshold,
-      kernelAssign = true, probes = probes,
+    semDedup(df, idCol, vecCol, centroids, threshold, probes = probes,
       maxCellRows = Some(maxCellRows))
   }
 
@@ -1154,7 +1110,7 @@ object Similarity {
   /** STATELESS per-subspace PQ code: subspace j's (static) codebook is
     * embedded as literals and the argmin of |c|² − 2·v_j·c is an
     * `array_min` over (score, code_id) structs — identical arithmetic
-    * and tie-break to [[pqEncode]], with no aggregation. Returns the m
+    * and tie-break to [[pqEncodeFast]], with no aggregation. Returns the m
     * code columns in subspace order.
     */
   def pqCodeExprs(vec: Column,
@@ -1222,8 +1178,8 @@ object Similarity {
   /** Encode every residual against ITS OWN cell's codebooks: per
     * (vector, subspace) the codeword minimizing |c|² − 2·r_j·c (the
     * |r_j|² term is constant under the argmin), lowest code_id on ties.
-    * One broadcast join + one map-side-combining argmin shuffle, same
-    * shape as [[pqEncode]]. Returns (id, centroid_id, sub, code).
+    * One broadcast join + one map-side-combining argmin shuffle.
+    * Returns (id, centroid_id, sub, code).
     */
   def ivfPqEncode(residuals: DataFrame, idCol: String,
       codebooks: DataFrame, m: Int, dims: Int): DataFrame = {
@@ -1305,7 +1261,7 @@ object Similarity {
     * product quantizer on residuals of all cells): per (vector,
     * subspace) the shared codeword minimizing |c|² − 2·r_j·c, lowest
     * code id on ties. Same broadcast-join + argmin-shuffle shape as
-    * [[pqEncode]], but the cell id rides along so the probe can restrict
+    * [[ivfPqEncode]], but the cell id rides along so the probe can restrict
     * to inverted lists. Shared codebooks are the scale choice: the
     * broadcast is m·ksub rows regardless of kc (per-cell codebooks grow
     * the broadcast kc-fold and train each cell on only its own members).
@@ -1449,10 +1405,13 @@ object Similarity {
         residual(col(vecCol), col("centroid")).as("resid"))
   }
 
-  /** Kernel twin of [[pqEncode]] in PACKED layout: (id, codes
-    * array<long>) — all m argmins per vector in one projection, codes in
-    * subspace order. The per-code values are bit-identical to the
-    * relational encoder's (spec-pinned); the layout is the FAISS shape
+  /** PQ-encode the corpus in PACKED layout: (id, codes array<long>) —
+    * per (vector, subspace) the codebook entry minimizing squared L2
+    * distance, computed as |c|² − 2·v_j·c (the |v_j|² term is constant
+    * under the argmin), all m argmins per vector in one projection, codes
+    * in subspace order. The per-code values are bit-identical to a
+    * relational broadcast-join + argmin encoder's (spec-pinned against
+    * the test oracle); the layout is the FAISS shape
     * (contiguous codes per vector), which the packed ADC probe scans
     * without re-grouping.
     */
@@ -1464,9 +1423,9 @@ object Similarity {
       .pqCodes(col(vecCol), local, dims / m).as("codes"))
   }
 
-  /** Kernel encode in the relational (id, sub, code) layout — a drop-in
-    * for [[pqEncode]] call sites that keep the row-per-subspace code
-    * table (bit-identical rows, map-only instead of the argmin shuffle).
+  /** [[pqEncodePacked]] in the (id, sub, code) layout — `m` rows per
+    * vector, the row-per-subspace code table the relational probes scan
+    * INSTEAD of the full vectors. Map-only, no argmin shuffle.
     */
   def pqEncodeFast(df: DataFrame, idCol: String, vecCol: String,
       codebooks: DataFrame, m: Int, dims: Int): DataFrame =
@@ -2003,7 +1962,7 @@ final case class PqIndex(m: Int, dims: Int, codebooks: DataFrame,
   def addVectors(batch: DataFrame, idCol: String, vecCol: String): PqIndex = {
     Similarity.requireFreshIds(batch, codes, idCol, "addVectors")
     copy(codes = codes.unionByName(
-      Similarity.pqEncode(batch, idCol, vecCol, codebooks, m, dims)))
+      Similarity.pqEncodeFast(batch, idCol, vecCol, codebooks, m, dims)))
   }
 
   /** Persisted incremental ingest: append the batch's codes to the
@@ -2015,14 +1974,13 @@ final case class PqIndex(m: Int, dims: Int, codebooks: DataFrame,
     Similarity.requireFreshIds(batch, codes, idCol, "appendVectors")
     cat.commitAll(Map(s"$name.codes" -> graft.catalog.TableDelta(
       appends = Seq((
-        Similarity.pqEncode(batch, idCol, vecCol, codebooks, m, dims),
+        Similarity.pqEncodeFast(batch, idCol, vecCol, codebooks, m, dims),
         "")))))
     PqIndex.load(batch.sparkSession, cat, name)
   }
 
   /** STATELESS PQ encoding for continuous ingest — works on a STREAMING
-    * frame (projection + generator only, no state store; the batch
-    * [[Similarity.pqEncode]] needs a groupBy-argmin). The codebooks
+    * frame (projection + generator only, no state store). The codebooks
     * (m × ksub rows of a persisted, static index) are collected once at
     * plan build and evaluated by the [[graft.functions.PqCodes]] kernel;
     * output rows (id, sub, code) are bit-identical to the batch
@@ -2047,9 +2005,9 @@ object PqIndex {
   def build(df: DataFrame, idCol: String, vecCol: String, m: Int,
       dims: Int, ksub: Int): PqIndex = {
     val cb = Similarity.pqSeedCodebooks(df, idCol, vecCol, m, dims, ksub)
-    // kernel twin of the relational pqEncode: bit-identical (id, sub,
-    // code) rows (QuantKernelsSpec/QuantKernelPropertySpec pin it), but
-    // map-only — the relational form paid a per-subvector explode +
+    // kernel encode: bit-identical (id, sub, code) rows to the
+    // relational oracle (QuantKernelsSpec/QuantKernelPropertySpec pin
+    // it), but map-only — the relational form paid a per-subvector explode +
     // broadcast join + argmin SORT aggregate with its exchange on every
     // corpus encode (the dominant stage of sim6/sim9). Same shape
     // buildTrained has used since r16.

@@ -239,11 +239,11 @@ object VectorOps {
     // the meaning-level twin of the lexical MinHash dedup pipeline
     "dd17_semdedup" -> ((s, d) => {
       val e = embeddings(s, d)
-      // kernelAssign: map-only argmax kernel, bit-identical to the
+      // cells by the map-only argmax kernel, bit-identical to the
       // relational assign (spec-pinned) — the oracle hash is the proof
       Similarity.semDedup(e, "vec_id", "embedding",
         Similarity.ivfSeedCentroids(e, "vec_id", "embedding", 16),
-        threshold = 0.4, kernelAssign = true)
+        threshold = 0.4)
     }),
 
     // the worst-case cell GUARD oracle-gated: same semantics as dd17
@@ -256,7 +256,7 @@ object VectorOps {
       val e = embeddings(s, d)
       Similarity.semDedup(e, "vec_id", "embedding",
         Similarity.ivfSeedCentroids(e, "vec_id", "embedding", 16),
-        threshold = 0.4, kernelAssign = true, maxCellRows = Some(64))
+        threshold = 0.4, maxCellRows = Some(64))
     }),
 
     // cluster-balanced corpus draw (topic balance): nearest seeded

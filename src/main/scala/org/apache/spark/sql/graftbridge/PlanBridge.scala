@@ -1,10 +1,7 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, AttributeSet, Expression, SortOrder}
-import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Plan-truncation bridge for iterative DataFrame algorithms.
   *
@@ -24,36 +21,17 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * rounds these loops cap at, and recompute-correct if blocks are
   * evicted.
   *
-  * With `carryPartitioning = true` the leaf CARRIES the truncated plan's
-  * output partitioning and ordering, so a loop whose round state is
-  * hash-laid-out by its join/group key does not re-exchange it every
-  * round. Under AQE this needs more than `Dataset.checkpoint`'s recipe
-  * (execute first, then `LogicalRDD.fromDataset`): the dataset's
-  * executedPlan is `AdaptiveSparkPlanExec`, which does NOT override
-  * `outputPartitioning` (LeafExecNode default — UnknownPartitioning), so
-  * `fromDataset`'s metadata capture never fires — every truncated leaf
-  * in the r17 plan dumps printed `UnknownPartitioning(0)`. Fix: after
-  * execute() has finalized the adaptive plan, read the partitioning/
-  * ordering off the FINAL inner plan (`aspe.executedPlan`) and rewrite
-  * its attributes onto the leaf's output positionally (the same rewrite
-  * `fromDataset` performs against the optimized plan).
-  *
-  * DEFAULT IS OFF for the iterative loops, by measurement (r18
-  * JobStats): a round-state leaf is usually the SMALL side of its next
-  * join, and an Unknown-partitioned leaf gets an Exchange whose stage
-  * boundary lets AQE broadcast it at runtime — the per-round
-  * "re-exchange" is node-sized and cheap. Carrying the layout lets the
-  * small side skip that exchange, which REMOVES the AQE re-planning
-  * point and forces the BIG side to co-partition instead (kCore: edge
-  * explode re-shuffled every round, 1.57M → 3.96M shuffle records at
-  * sf0.1). Turn it on only where a co-partitioned consumer of
-  * comparable size is proven (PlanAudit's planbridge_carry pins the
-  * mechanism: hash layout on the leaf, zero exchanges for a same-key
-  * re-aggregate).
+  * The leaf reports UnknownPartitioning under AQE (the dataset's
+  * executedPlan is `AdaptiveSparkPlanExec`, which hides the final plan's
+  * layout), so a consumer re-exchanges it. That is kept on purpose: a
+  * round-state leaf is usually the SMALL side of its next join, and
+  * the exchange's stage boundary lets AQE broadcast it at runtime.
+  * Carrying the hash layout instead removed that re-planning point and
+  * made the big side co-partition (kCore: 1.57M → 3.96M shuffle records
+  * at sf0.1), and on g2_pagerank it changed no counter.
   */
 object PlanBridge {
-  def truncated(df: DataFrame,
-      carryPartitioning: Boolean = false): DataFrame = {
+  def truncated(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val ds =
@@ -62,50 +40,8 @@ object PlanBridge {
     // execute FIRST (finalizes AQE stages), THEN capture metadata; copy
     // each InternalRow: execute() yields operator-reused UnsafeRow
     // buffers (Dataset.checkpoint does the same defensive copy)
-    val qe = df.queryExecution
-    val rdd = qe.executedPlan.execute().map(_.copy())
-    val base = LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
-    val leaf = qe.executedPlan match {
-      case a: AdaptiveSparkPlanExec if carryPartitioning &&
-          base.outputPartitioning.isInstanceOf[UnknownPartitioning] =>
-        val fin = a.executedPlan // the finalized inner plan
-        val attrMap = AttributeMap(fin.output.zip(base.output))
-        val outSet = AttributeSet(base.output)
-        def rewrite(p: Partitioning): Partitioning = p match {
-          // first leaf of a collection (fromDataset's own rule — a deep
-          // PartitioningCollection from nested joins must not be carried
-          // wholesale)
-          case pc: PartitioningCollection => rewrite(pc.partitionings.head)
-          case e: Expression =>
-            val r = e.transform {
-              case att: Attribute => attrMap.getOrElse(att, att)
-            }.asInstanceOf[Partitioning]
-            // a partitioning keyed on a column pruned from the output
-            // cannot be stated on the leaf
-            if (r.asInstanceOf[Expression].references.subsetOf(outSet)) r
-            else UnknownPartitioning(p.numPartitions)
-          case other => other
-        }
-        val part = rewrite(fin.outputPartitioning)
-        val ord = fin.outputOrdering.flatMap { so =>
-          val r = so.transform {
-            case att: Attribute => attrMap.getOrElse(att, att)
-          }.asInstanceOf[SortOrder]
-          if (r.references.subsetOf(outSet)) Some(r) else None
-        }
-        // carry fromDataset's rewritten stats/constraints over unchanged
-        // (otherCopyArgs = Seq(session, originStats, originConstraints);
-        // Scala-protected but bytecode-public, hence the reflective call)
-        val extra = classOf[LogicalRDD].getMethod("otherCopyArgs")
-          .invoke(base).asInstanceOf[Seq[Any]]
-        new LogicalRDD(base.output, base.rdd, part, ord,
-          base.isStreaming, base.stream)(spark,
-          extra(1).asInstanceOf[Option[
-            org.apache.spark.sql.catalyst.plans.logical.Statistics]],
-          extra(2).asInstanceOf[Option[
-            org.apache.spark.sql.catalyst.expressions.ExpressionSet]])
-      case _ => base
-    }
-    org.apache.spark.sql.classic.Dataset.ofRows(spark, leaf)
+    val rdd = df.queryExecution.executedPlan.execute().map(_.copy())
+    org.apache.spark.sql.classic.Dataset.ofRows(spark,
+      LogicalRDD.fromDataset(rdd, ds, isStreaming = false))
   }
 }

@@ -67,7 +67,7 @@ class QuantKernelPropertySpec extends SparkSpec {
           (j, k.toLong, mkVec(sd).map(_.toDouble))) ++
           Seq((j, ksub.toLong, dup), (j, ksub + 1L, dup))
       }.toDF("sub", "centroid_id", "centroid")
-      val relCodes = Similarity.pqEncode(emb, "vec_id", "embedding",
+      val relCodes = PqEncodeOracle.pqEncode(emb, "vec_id", "embedding",
         cb, m, dims)
       val fastCodes = Similarity.pqEncodeFast(emb, "vec_id", "embedding",
         cb, m, dims)

@@ -36,7 +36,7 @@ class QuantKernelsSpec extends SparkSpec {
   test("kernel PQ encode matches relational pqEncode on trained codebooks") {
     val cb = Similarity.pqTrain(emb, "vec_id", "embedding", m = 8,
       dims = 64, ksub = 16, iters = 2).cache()
-    val rel = Similarity.pqEncode(emb, "vec_id", "embedding", cb, 8, 64)
+    val rel = PqEncodeOracle.pqEncode(emb, "vec_id", "embedding", cb, 8, 64)
     val fast = Similarity.pqEncodeFast(emb, "vec_id", "embedding", cb, 8, 64)
     assert(rel.schema.map(f => (f.name, f.dataType)) ===
       fast.schema.map(f => (f.name, f.dataType)))
@@ -47,7 +47,8 @@ class QuantKernelsSpec extends SparkSpec {
     val m = 8
     val cb = Similarity.pqTrain(emb, "vec_id", "embedding", m, dims = 64,
       ksub = 16, iters = 2).cache()
-    val relCodes = Similarity.pqEncode(emb, "vec_id", "embedding", cb, m, 64)
+    val relCodes = PqEncodeOracle.pqEncode(emb, "vec_id", "embedding", cb,
+      m, 64)
     val rel = Similarity.pqTopK(relCodes, cb, queryVec, m, k = 25)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     val packed = Similarity.pqEncodePacked(emb, "vec_id", "embedding",
@@ -247,13 +248,22 @@ class QuantKernelsSpec extends SparkSpec {
       e3.getMessage.toLowerCase.contains("data type mismatch"))
   }
 
-  test("semDedup kernelAssign produces the identical kept set") {
+  test("semDedup's kernel cells keep the same set as a relational-assign " +
+      "replay") {
     val centroids = Similarity.ivfSpreadSeedCentroids(
       emb, "vec_id", "embedding", 16).cache()
-    val rel = Similarity.semDedup(emb, "vec_id", "embedding", centroids,
-      threshold = 0.9)
+    // replay: cells from the relational argmax, b drops iff a lower-id
+    // vector in its cell sits at cosine >= 0.9
+    val cells = emb.select($"vec_id", $"embedding").join(
+      Similarity.assign(emb, "vec_id", "embedding", centroids), Seq("vec_id"))
+    val dropped = cells.as("a").join(cells.as("b"),
+        $"a.centroid_id" === $"b.centroid_id" && $"a.vec_id" < $"b.vec_id")
+      .where(Similarity.cosine($"a.embedding", $"b.embedding") >= 0.9)
+      .select($"b.vec_id".as("vec_id")).distinct()
+    val rel = cells.select($"vec_id", $"centroid_id")
+      .join(dropped, Seq("vec_id"), "left_anti")
     val fast = Similarity.semDedup(emb, "vec_id", "embedding", centroids,
-      threshold = 0.9, kernelAssign = true)
+      threshold = 0.9)
     assert(rel.exceptAll(fast).isEmpty && fast.exceptAll(rel).isEmpty)
   }
 
@@ -277,11 +287,11 @@ class QuantKernelsSpec extends SparkSpec {
       .join(Similarity.assignFast(emb, "vec_id", "embedding", centroids),
         Seq("vec_id"))
     val got = Similarity.semDedup(emb, "vec_id", "embedding", centroids,
-      threshold = t, kernelAssign = true, probes = 2)
+      threshold = t, probes = 2)
     assert(expect.exceptAll(got).isEmpty && got.exceptAll(expect).isEmpty)
     // probes=2 never keeps MORE than probes=1 (drop set only widens)
     val single = Similarity.semDedup(emb, "vec_id", "embedding",
-      centroids, threshold = t, kernelAssign = true)
+      centroids, threshold = t)
     assert(got.select($"vec_id").exceptAll(single.select($"vec_id"))
       .isEmpty)
   }

@@ -709,7 +709,7 @@ class SimilaritySpec extends SparkSpec {
       val cents = Similarity.ivfTrain(df, "vec_id", "embedding", k,
         iters = 2, trainLimit = Some(math.max(8192, 32 * k)))
       Similarity.semDedup(df, "vec_id", "embedding", cents, thr,
-        kernelAssign = true, probes = 2, maxCellRows = Some(bound))
+        probes = 2, maxCellRows = Some(bound))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
     def viaWrapper(df: org.apache.spark.sql.DataFrame, thr: Double,

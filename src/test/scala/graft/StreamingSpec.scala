@@ -223,7 +223,7 @@ class StreamingSpec extends SparkSpec {
       "streaming cell assignment != batch")
     val codesGot = spark.table("ann_codes")
       .as[(Long, Int, Long)].collect().toSet
-    val codesWant = graft.ops.Similarity
+    val codesWant = PqEncodeOracle
       .pqEncode(batchDf, "vec_id", "embedding", pq.codebooks, 4, 64)
       .as[(Long, Int, Long)].collect().toSet
     assert(codesGot == codesWant && codesWant.size == 160,
