@@ -83,14 +83,11 @@ object Cli {
     * parsers run again inside dispatch; they are cheap and pure).
     */
   private def preValidate(args: List[String]): Unit = args match {
-    case "run" :: _ :: _ :: rest => parseRunOpts(rest); ()
+    case "run" :: _ :: _ :: rest => parseServiceOpts("run", rest); ()
     case "seed-apdb" :: _ :: rest => parseSeedArgs(rest); ()
     case "demo" :: _ :: rest => parseDemoArgs(rest); ()
-    case "upload" :: _ :: _ :: _ :: rest =>
-      parseServiceOpts("upload", rest, allowStage = true); ()
-    case "promote" :: _ :: _ :: rest =>
-      parseServiceOpts("promote", rest, allowStage = false,
-        allowLoop = true); ()
+    case "upload" :: _ :: _ :: _ :: rest => parseServiceOpts("upload", rest); ()
+    case "promote" :: _ :: _ :: rest => parseServiceOpts("promote", rest); ()
     case "create" :: _ :: rest =>
       parseCreateOpts(rest).felisPath.foreach { p =>
         if (!java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
@@ -108,7 +105,9 @@ object Cli {
     case _ => ()
   }
 
-  /** `upload` / `promote` service knobs. `promote` gets the loop family
+  /** Knobs of the three services (defaults from P/cli/options.py:105-124).
+    * Each command accepts only its own flags ([[serviceFlags]]): `run`
+    * the replication family, `upload` --stage, `promote` the loop family
     * (--loop/--single/--exit-on-empty/--check-interval/--max-chunks) so
     * the three services deploy as polling peers the way the reference
     * runs them — as separate processes over one catalog root, safely:
@@ -118,26 +117,43 @@ object Cli {
     * re-runs the poll instead of silently losing its update.
     * --max-chunks is the backpressure cap per poll.
     */
-  private[graft] final case class ServiceOpts(stage: Boolean = false,
-      metricsJson: Option[String] = None,
-      loop: Boolean = false, single: Boolean = false,
-      exitOnEmpty: Boolean = false,
-      maxChunks: Option[Int] = None, checkIntervalS: Long = 360L)
+  private[graft] final case class ServiceOpts(
+      single: Boolean = false, exitOnEmpty: Boolean = false,
+      metricsJson: Option[String] = None, checkIntervalS: Long = 360L,
+      update: Boolean = false, exportRoot: Option[String] = None,
+      minWaitS: Long = 300L, maxWaitS: Long = 900L,
+      stage: Boolean = false, loop: Boolean = false,
+      maxChunks: Option[Int] = None)
 
-  private def parseServiceOpts(cmd: String, rest: List[String],
-      allowStage: Boolean, allowLoop: Boolean = false): ServiceOpts = {
+  private val serviceFlags = Map(
+    "run" -> Set("--single", "--exit-on-empty", "--metrics-json",
+      "--check-interval", "--update", "--export", "--min-wait-time",
+      "--max-wait-time"),
+    "upload" -> Set("--metrics-json", "--stage"),
+    "promote" -> Set("--single", "--exit-on-empty", "--metrics-json",
+      "--check-interval", "--loop", "--max-chunks"))
+
+  private def parseServiceOpts(cmd: String, rest: List[String]): ServiceOpts = {
     @annotation.tailrec
     def go(args: List[String], o: ServiceOpts): ServiceOpts = args match {
-      case "--stage" :: t if allowStage => go(t, o.copy(stage = true))
-      case "--metrics-json" :: dest :: t => go(t, o.copy(metricsJson = Some(dest)))
-      case "--loop" :: t if allowLoop => go(t, o.copy(loop = true))
-      case "--single" :: t if allowLoop => go(t, o.copy(single = true))
-      case "--exit-on-empty" :: t if allowLoop => go(t, o.copy(exitOnEmpty = true))
-      case "--max-chunks" :: v :: t if allowLoop =>
-        go(t, o.copy(maxChunks = Some(numArg("--max-chunks", v).toInt)))
-      case "--check-interval" :: v :: t if allowLoop =>
-        go(t, o.copy(checkIntervalS = numArg("--check-interval", v)))
       case Nil => o
+      case flag :: _ if !serviceFlags(cmd)(flag) =>
+        throw UsageError(s"unknown $cmd option: $flag")
+      case "--single" :: t => go(t, o.copy(single = true))
+      case "--exit-on-empty" :: t => go(t, o.copy(exitOnEmpty = true))
+      case "--metrics-json" :: dest :: t => go(t, o.copy(metricsJson = Some(dest)))
+      case "--check-interval" :: v :: t =>
+        go(t, o.copy(checkIntervalS = numArg("--check-interval", v)))
+      case "--update" :: t => go(t, o.copy(update = true))
+      case "--export" :: dir :: t => go(t, o.copy(exportRoot = Some(dir)))
+      case "--min-wait-time" :: v :: t =>
+        go(t, o.copy(minWaitS = numArg("--min-wait-time", v)))
+      case "--max-wait-time" :: v :: t =>
+        go(t, o.copy(maxWaitS = numArg("--max-wait-time", v)))
+      case "--stage" :: t => go(t, o.copy(stage = true))
+      case "--loop" :: t => go(t, o.copy(loop = true))
+      case "--max-chunks" :: v :: t =>
+        go(t, o.copy(maxChunks = Some(numArg("--max-chunks", v).toInt)))
       case bad :: _ => throw UsageError(s"unknown $cmd option: $bad")
     }
     go(rest, ServiceOpts())
@@ -159,6 +175,55 @@ object Cli {
         java.nio.file.StandardOpenOption.APPEND)
       ()
     }
+
+  /** The one runner behind the `run`, `upload` and `promote` services.
+    * `drive` runs the service's poll loop with the runner's per-poll
+    * callback, which prints `report(poll, ids)` and the poll's timer
+    * summary, appends the poll's `--metrics-json` window and resets
+    * [[graft.Metrics]] for the next one. SIGTERM/Ctrl-C asks the loop to
+    * stop, then holds the JVM (bounded) until the poll in flight has
+    * finished, so no chunk copy or commit is torn.
+    */
+  private def serve(command: String, metricsJson: Option[String],
+      requestStop: () => Unit, report: (Int, Seq[Long]) => String)(
+      drive: ((Int, Seq[Long]) => Unit) => Seq[Long]): Seq[Long] = {
+    val stopped = new java.util.concurrent.CountDownLatch(1)
+    val hook = new Thread(() => {
+      requestStop()
+      stopped.await(60L, java.util.concurrent.TimeUnit.SECONDS)
+      ()
+    })
+    Runtime.getRuntime.addShutdownHook(hook)
+    graft.Metrics.reset()
+    // wall_s spans from the previous poll's report, so it includes the
+    // inter-poll wait (the replication-lag number an operator trends)
+    var windowStartNs = System.nanoTime()
+    try drive { (poll, ids) =>
+      println(report(poll, ids))
+      graft.Metrics.summary().toSeq.sortBy(_._1).foreach {
+        case (m, (n, s)) => println(f"  $m%-24s n=$n%-4d total=${s}%.2f s")
+      }
+      metricsJson.foreach { dest =>
+        emitJson(dest, graft.Metrics.jsonSummary(command, poll, ids,
+          (System.nanoTime() - windowStartNs) / 1e9))
+      }
+      windowStartNs = System.nanoTime()
+      graft.Metrics.reset()
+    } finally {
+      stopped.countDown()
+      try Runtime.getRuntime.removeShutdownHook(hook)
+      catch { case _: IllegalStateException => () } // already shutting down
+    }
+  }
+
+  /** [[serve]] for a one-shot command: a single poll of a [[ServiceLoop]]. */
+  private def serveOnce(command: String, metricsJson: Option[String],
+      report: Seq[Long] => String)(poll: => Seq[Long]): Seq[Long] = {
+    val once = new ServiceLoop
+    serve(command, metricsJson, () => once.requestStop(),
+      (_, ids) => report(ids))(onPoll =>
+      once.run(0L, single = true, onPoll = onPoll)(poll))
+  }
 
   /** `create` knobs (reference create-sql: felis_schema_options + --drop,
     * P/cli/ppdb_cli.py:60-68).
@@ -387,33 +452,6 @@ object Cli {
     go(rest, CurateOpts())
   }
 
-  /** Replication-loop knobs (defaults from P/cli/options.py:105-124). */
-  private[graft] final case class RunOpts(
-      single: Boolean = false, exitOnEmpty: Boolean = false,
-      update: Boolean = false, exportRoot: Option[String] = None,
-      metricsJson: Option[String] = None,
-      minWaitS: Long = 300L, maxWaitS: Long = 900L, checkIntervalS: Long = 360L)
-
-  private def parseRunOpts(rest: List[String]): RunOpts = {
-    @annotation.tailrec
-    def go(args: List[String], o: RunOpts): RunOpts = args match {
-      case "--single" :: t => go(t, o.copy(single = true))
-      case "--exit-on-empty" :: t => go(t, o.copy(exitOnEmpty = true))
-      case "--update" :: t => go(t, o.copy(update = true))
-      case "--export" :: dir :: t => go(t, o.copy(exportRoot = Some(dir)))
-      case "--metrics-json" :: dest :: t => go(t, o.copy(metricsJson = Some(dest)))
-      case "--min-wait-time" :: v :: t =>
-        go(t, o.copy(minWaitS = numArg("--min-wait-time", v)))
-      case "--max-wait-time" :: v :: t =>
-        go(t, o.copy(maxWaitS = numArg("--max-wait-time", v)))
-      case "--check-interval" :: v :: t =>
-        go(t, o.copy(checkIntervalS = numArg("--check-interval", v)))
-      case Nil => o
-      case bad :: _ => throw UsageError(s"unknown run option: $bad")
-    }
-    go(rest, RunOpts())
-  }
-
   /** Command dispatch on an externally-owned session (tests drive this
     * directly; `main` wraps it with session lifecycle).
     */
@@ -464,7 +502,7 @@ object Cli {
           s"tables: ${reg.tables.mkString(", ")})")
 
       case "run" :: apdbRoot :: catalogRoot :: rest =>
-        val opts = parseRunOpts(rest)
+        val opts = parseServiceOpts("run", rest)
         graft.Metrics.logEnabled = true
         // backend select: direct store (reference SQL backend) or, with
         // --export, chunk export into the staged upload/promote pipeline
@@ -491,43 +529,13 @@ object Cli {
             maxWaitUs = opts.maxWaitS * 1000000L,
             checkIntervalUs = opts.checkIntervalS * 1000000L),
           update = opts.update)
-        // SIGTERM/Ctrl-C: ask the loop to finish the current poll, then
-        // hold the JVM until it has (bounded), so no chunk copy is torn
-        val stopped = new java.util.concurrent.CountDownLatch(1)
-        val hook = new Thread(() => {
-          rep.requestStop()
-          stopped.await(60L, java.util.concurrent.TimeUnit.SECONDS)
-          ()
-        })
-        Runtime.getRuntime.addShutdownHook(hook)
-        try {
-          // wall_s spans from the previous poll's report (so it includes
-          // the inter-poll wait — the replication-lag number an operator
-          // trends)
-          var windowStartNs = System.nanoTime()
-          val copied = rep.run(single = opts.single,
-            exitOnEmpty = opts.exitOnEmpty,
-            onPoll = (poll, ids) => {
-              println(s"poll $poll: " +
-                (if (ids.isEmpty) "nothing to replicate"
-                else s"replicated chunks ${ids.mkString(", ")}"))
-              // THIS poll's timings only: summarize, then reset
-              graft.Metrics.summary().toSeq.sortBy(_._1).foreach {
-                case (m, (n, s)) => println(f"  $m%-24s n=$n%-4d total=${s}%.2f s")
-              }
-              opts.metricsJson.foreach { dest =>
-                emitJson(dest, graft.Metrics.jsonSummary("run", poll, ids,
-                  (System.nanoTime() - windowStartNs) / 1e9))
-              }
-              windowStartNs = System.nanoTime()
-              graft.Metrics.reset()
-            })
-          println(s"run finished: ${copied.size} chunks replicated")
-        } finally {
-          stopped.countDown()
-          try Runtime.getRuntime.removeShutdownHook(hook)
-          catch { case _: IllegalStateException => () } // already shutting down
-        }
+        val copied = serve("run", opts.metricsJson, () => rep.requestStop(),
+            (poll, ids) => s"poll $poll: " +
+              (if (ids.isEmpty) "nothing to replicate"
+              else s"replicated chunks ${ids.mkString(", ")}"))(onPoll =>
+          rep.run(single = opts.single, exitOnEmpty = opts.exitOnEmpty,
+            onPoll = onPoll))
+        println(s"run finished: ${copied.size} chunks replicated")
 
       case "list-chunks" :: "--apdb" :: root :: Nil =>
         // source-side listing (replication_list_chunks_apdb.py:29-50) —
@@ -558,7 +566,7 @@ object Cli {
           s"under $root")
 
       case "upload" :: root :: exportRoot :: remoteRoot :: rest =>
-        val opts = parseServiceOpts("upload", rest, allowStage = true)
+        val opts = parseServiceOpts("upload", rest)
         val promoter = new Promoter(spark,
           new VersionedCatalog(root, VersionedCatalog.ppdbWriteOptions),
           exportRoot)
@@ -571,64 +579,37 @@ object Cli {
           else (_, _) => ()
         val uploader = new ChunkUploader(spark, promoter, remoteRoot,
           notify = notify,
-          exitOnEmpty = true,
           exitOnError = sys.env.get("GRAFT_EXIT_ON_ERROR").contains("1"))
-        graft.Metrics.reset()
-        val t0 = System.nanoTime()
-        val ids = uploader.runOnce()
-        opts.metricsJson.foreach { dest =>
-          emitJson(dest, graft.Metrics.jsonSummary("upload", 1, ids,
-            (System.nanoTime() - t0) / 1e9))
-        }
-        println(if (ids.isEmpty) "nothing to upload"
-          else s"uploaded chunks ${ids.mkString(", ")} to $remoteRoot")
+        serveOnce("upload", opts.metricsJson, ids =>
+          if (ids.isEmpty) "nothing to upload"
+          else s"uploaded chunks ${ids.mkString(", ")} to $remoteRoot")(
+          uploader.runOnce())
 
       case "promote" :: root :: exportRoot :: rest =>
-        val opts = parseServiceOpts("promote", rest, allowStage = false,
-          allowLoop = true)
+        val opts = parseServiceOpts("promote", rest)
         val promoter = new Promoter(spark,
           new VersionedCatalog(root, VersionedCatalog.ppdbWriteOptions),
           exportRoot)
         promoter.init()
-        graft.Metrics.reset()
+        def promoted(ids: Seq[Long]) =
+          if (ids.isEmpty) "nothing promotable"
+          else s"promoted chunks ${ids.mkString(", ")}"
         if (opts.loop || opts.single) {
           // continuous service: each poll stages whatever upload
           // finished, promotes up to --max-chunks of the staged prefix,
-          // sleeps --check-interval when idle. SIGTERM finishes the
-          // current poll (promote commits are atomic; a kill mid-poll
-          // loses nothing, a finished poll isn't re-done)
-          val stopped = new java.util.concurrent.CountDownLatch(1)
-          val hook = new Thread(() => {
-            promoter.requestStop()
-            stopped.await(60L, java.util.concurrent.TimeUnit.SECONDS)
-            ()
-          })
-          Runtime.getRuntime.addShutdownHook(hook)
-          try {
-            var windowStartNs = System.nanoTime()
-            val ids = promoter.run(single = opts.single,
+          // sleeps --check-interval when idle (promote commits are
+          // atomic; a kill mid-poll loses nothing, a finished poll isn't
+          // re-done)
+          val ids = serve("promote", opts.metricsJson,
+              () => promoter.requestStop(),
+              (poll, ids) => s"poll $poll: ${promoted(ids)}")(onPoll =>
+            promoter.run(single = opts.single,
               exitOnEmpty = opts.exitOnEmpty,
               maxChunksPerPoll = opts.maxChunks,
               checkIntervalMs = opts.checkIntervalS * 1000L,
-              onPoll = (poll, promoted) => {
-                println(s"poll $poll: " +
-                  (if (promoted.isEmpty) "nothing promotable"
-                  else s"promoted chunks ${promoted.mkString(", ")}"))
-                opts.metricsJson.foreach { dest =>
-                  emitJson(dest, graft.Metrics.jsonSummary("promote", poll,
-                    promoted, (System.nanoTime() - windowStartNs) / 1e9))
-                }
-                windowStartNs = System.nanoTime()
-                graft.Metrics.reset()
-              })
-            println(s"promote finished: ${ids.size} chunks promoted")
-          } finally {
-            stopped.countDown()
-            try Runtime.getRuntime.removeShutdownHook(hook)
-            catch { case _: IllegalStateException => () }
-          }
-        } else {
-          val t0 = System.nanoTime()
+              onPoll = onPoll))
+          println(s"promote finished: ${ids.size} chunks promoted")
+        } else serveOnce("promote", opts.metricsJson, promoted) {
           // self-heal: any uploaded-but-unstaged chunk (upload ran
           // without --stage, or a crash landed between upload and
           // staging) is staged from its remote URI before promotion —
@@ -636,13 +617,7 @@ object Cli {
           val uploaded = promoter.stageUploaded()
           if (uploaded.nonEmpty)
             println(s"staged uploaded chunks ${uploaded.mkString(", ")}")
-          val ids = promoter.promote(opts.maxChunks)
-          opts.metricsJson.foreach { dest =>
-            emitJson(dest, graft.Metrics.jsonSummary("promote", 1, ids,
-              (System.nanoTime() - t0) / 1e9))
-          }
-          println(if (ids.isEmpty) "nothing promotable"
-            else s"promoted chunks ${ids.mkString(", ")}")
+          promoter.promote(opts.maxChunks)
         }
 
       // analytic bridge: materialize the latest-version DiaObject

@@ -33,20 +33,17 @@ final class ChunkUploadException(val chunkId: Long, msg: String,
   * never observes a partial chunk. Empty chunks upload only their
   * manifest and keep their local status (reference behavior).
   *
-  * Loop knobs mirror the reference CLI (P/cli/options.py:142-154 and
-  * chunk_uploader.py:127-178): `exitOnEmpty` ends [[run]] when a poll
-  * finds nothing; `exitOnError` propagates the first failure instead of
-  * logging and continuing; the intervals pace polls and uploads.
+  * One [[runOnce]] is one poll; the CLI's `upload` runs it as a single
+  * poll of a [[ServiceLoop]]. `exitOnError` (reference CLI,
+  * P/cli/options.py:142-154) propagates the first failure instead of
+  * logging it to stderr, counting it as `upload_failures` and continuing.
   */
 final class ChunkUploader(
     spark: SparkSession,
     promoter: Promoter,
     remoteRoot: String,
     notify: (Long, String) => Unit = (_, _) => (),
-    exitOnEmpty: Boolean = true,
-    exitOnError: Boolean = false,
-    waitIntervalMs: Long = 1000L,
-    uploadIntervalMs: Long = 0L) {
+    exitOnError: Boolean = false) {
 
   private val conf = spark.sparkContext.hadoopConfiguration
 
@@ -63,8 +60,8 @@ final class ChunkUploader(
     * older builds, or a crash between upload and bookkeeping) fall back
     * to one remote-existence probe and self-heal by recording the uri
     * when the manifest is found. With `exitOnError` unset, a failed
-    * chunk is skipped (it stays exported for the next pass) and later
-    * chunks still process.
+    * chunk is reported and skipped (it stays exported for the next pass)
+    * and later chunks still process.
     */
   def runOnce(): Seq[Long] = {
     val rows = promoter.catalog.read(spark, "PpdbReplicaChunk")
@@ -103,25 +100,10 @@ final class ChunkUploader(
       catch {
         case e: ChunkUploadException =>
           if (exitOnError) throw e
+          System.err.println(e.getMessage +
+            Option(e.getCause).fold("")(c => s": $c"))
+          graft.Metrics.count("upload_failures", 1.0, "chunk_id" -> id.toString)
           false
-      }
-    }
-  }
-
-  /** Reference run-loop: poll, upload, sleep — until an empty poll (when
-    * `exitOnEmpty`) or `maxPolls` passes.
-    */
-  def run(maxPolls: Int = Int.MaxValue): Unit = {
-    var polls = 0
-    var done = false
-    while (!done && polls < maxPolls) {
-      val uploaded = runOnce()
-      polls += 1
-      if (uploaded.isEmpty && exitOnEmpty) done = true
-      else if (!done) {
-        if (uploadIntervalMs > 0 && uploaded.nonEmpty)
-          Thread.sleep(uploadIntervalMs)
-        else if (uploaded.isEmpty) Thread.sleep(waitIntervalMs)
       }
     }
   }

@@ -76,9 +76,10 @@ object ChunkManifest {
       updateCount, entries)
   }
 
-  /** Atomic publish: the manifest is the file downstream STREAMS trigger
-    * on (ChunkStream), so it must never be observable half-written —
-    * tmp-write + ATOMIC_MOVE, the same discipline as SchemaRegistry.put.
+  /** Atomic publish: the manifest is what [[ChunkUploader]] and staging
+    * validate a chunk against, so it must never be observable
+    * half-written — tmp-write + ATOMIC_MOVE, the same discipline as
+    * SchemaRegistry.put.
     */
   def write(m: ChunkManifest, dir: String): Unit = {
     val tmp = Paths.get(dir, s".$FileName.tmp")

@@ -75,11 +75,10 @@ final class Promoter(spark: SparkSession, val catalog: VersionedCatalog,
     * Each table DataFrame is evaluated exactly ONCE (the parquet write);
     * emptiness and manifest row counts come from the written footers, not
     * a prior `count()` pass. Publish order is data dirs → chunk-status
-    * commit → manifest: the manifest is what [[ChunkStream]] triggers on,
-    * so by the time it appears the status row a staging consumer needs is
-    * already committed (manifest-first would let a fast stream observe a
-    * chunk it can never stage, checkpoint it as consumed, and wedge the
-    * promote contiguity barrier).
+    * commit → manifest: [[ChunkUploader]] picks up `exported` rows and
+    * validates their manifest, so the manifest is written last — by the
+    * time it appears, every file it names and the status row are already
+    * committed.
     */
   def exportChunk(chunk: ChunkData): String =
       graft.Metrics.time("write_parquet_time",
@@ -335,59 +334,31 @@ final class Promoter(spark: SparkSession, val catalog: VersionedCatalog,
     uploaded
   }
 
-  @volatile private var stopRequested = false
+  private val loop = new ServiceLoop
 
   /** Ask a running [[run]] loop to exit after the current poll. */
-  def requestStop(): Unit = stopRequested = true
+  def requestStop(): Unit = loop.requestStop()
 
   /** Continuous promotion — the service-loop shape the reference deploys
     * as the promoter peer of the replicator and uploader
-    * (P/bigquery/chunk_promoter.py's polling deployment): each poll
-    * stages whatever upload finished ([[stageUploaded]]), promotes up to
-    * `maxChunksPerPoll` of the contiguous staged prefix, and reports via
-    * `onPoll`. A poll that promoted something rolls straight into the
-    * next poll (more may be waiting — and with a cap the remainder
-    * usually IS waiting); an idle poll sleeps `checkIntervalMs` first,
-    * in 1 s slices so [[requestStop]] takes effect promptly. Exits on
-    * requestStop, after the first poll in `single` mode (promoting or
-    * not — a one-shot on an idle catalog returns empty instead of
-    * hanging on the check interval), or on an idle poll when
-    * `exitOnEmpty`. Returns every chunk id promoted, in promote order.
+    * (P/bigquery/chunk_promoter.py's polling deployment): a
+    * [[ServiceLoop]] whose poll stages whatever upload finished
+    * ([[stageUploaded]]) and promotes up to `maxChunksPerPoll` of the
+    * contiguous staged prefix; an idle poll sleeps `checkIntervalMs`
+    * before the next. `single` exits after the first poll whether or not
+    * it promoted (a one-shot on an idle catalog returns empty instead of
+    * hanging on the check interval); `exitOnEmpty` exits on an idle poll.
+    * Returns every chunk id promoted, in promote order.
     */
   def run(single: Boolean = false, exitOnEmpty: Boolean = false,
       maxChunksPerPoll: Option[Int] = None,
       checkIntervalMs: Long = 360000L,
       sleepMs: Long => Unit = Thread.sleep(_),
-      onPoll: (Int, Seq[Long]) => Unit = (_, _) => ()): Seq[Long] = {
-    // a requestStop only ends the run it interrupts — reset here so an
-    // embedded/test caller can reuse the instance for a later run
-    stopRequested = false
-    val promoted = Seq.newBuilder[Long]
-    var waitMs = 0L
-    var polls = 0
-    var done = false
-    while (!done && !stopRequested) {
-      if (waitMs > 0) {
-        var left = waitMs
-        while (left > 0 && !stopRequested) {
-          sleepMs(math.min(left, 1000L)); left -= 1000L
-        }
-      }
-      if (!stopRequested) {
-        polls += 1
-        stageUploaded()
-        val ids = promote(maxChunksPerPoll)
-        promoted ++= ids
-        onPoll(polls, ids)
-        // single = one-shot: exit after the FIRST poll whether or not it
-        // promoted (same semantics as Replicator.run — an idle catalog
-        // must not hang a one-shot command on the check interval)
-        if (single || (ids.isEmpty && exitOnEmpty)) done = true
-        waitMs = if (ids.nonEmpty) 0L else checkIntervalMs
-      }
+      onPoll: (Int, Seq[Long]) => Unit = (_, _) => ()): Seq[Long] =
+    loop.run(checkIntervalMs, single, exitOnEmpty, sleepMs, onPoll) {
+      stageUploaded()
+      promote(maxChunksPerPoll)
     }
-    promoted.result()
-  }
 
   // ----------------------------------------------------------------- helpers
 

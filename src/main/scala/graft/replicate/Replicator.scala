@@ -31,12 +31,12 @@ final class Replicator(spark: SparkSession, source: ApdbSource, ppdb: ReplicaTar
     config: ReplicatorConfig = ReplicatorConfig(),
     update: Boolean = false) {
 
-  @volatile private var stopRequested = false
+  private val loop = new ServiceLoop
 
-  /** Ask a running [[run]] loop to exit after the current poll (wired to
-    * SIGTERM by the CLI; also interrupts the inter-poll sleep).
+  /** Ask [[run]] to exit after the current poll (wired to SIGTERM by the
+    * CLI; also interrupts the inter-poll sleep). See [[ServiceLoop]].
     */
-  def requestStop(): Unit = stopRequested = true
+  def requestStop(): Unit = loop.requestStop()
 
   /** One poll; returns the chunk ids copied (ascending).
     *
@@ -97,11 +97,11 @@ final class Replicator(spark: SparkSession, source: ApdbSource, ppdb: ReplicaTar
     }
   }
 
-  /** The continuous replication loop (P/replicator.py:193-247): poll,
-    * copy everything settled, and either go straight into the next poll
-    * (something was copied — more may already be waiting) or sleep
-    * `checkInterval` first. Exits on [[requestStop]], after one copy in
-    * `single` mode, or on an empty poll when `exitOnEmpty`.
+  /** The continuous replication loop (P/replicator.py:193-247): a
+    * [[ServiceLoop]] over [[runOnce]] that sleeps `checkInterval` after an
+    * empty poll. `single` copies at most one chunk with a strict
+    * unique_id check and exits after that poll; `exitOnEmpty` exits on an
+    * empty poll.
     *
     * `nowUs`/`sleepMs` are injectable so tests can drive multiple polls
     * without wall-clock waits; `onPoll` observes each poll's result (the
@@ -111,32 +111,8 @@ final class Replicator(spark: SparkSession, source: ApdbSource, ppdb: ReplicaTar
   def run(single: Boolean = false, exitOnEmpty: Boolean = false,
       nowUs: () => Long = () => System.currentTimeMillis() * 1000L,
       sleepMs: Long => Unit = Thread.sleep(_),
-      onPoll: (Int, Seq[Long]) => Unit = (_, _) => ()): Seq[Long] = {
-    // a requestStop only ends the run it interrupts — reset here so an
-    // embedded/test caller can reuse the instance for a later run
-    stopRequested = false
-    val copied = Seq.newBuilder[Long]
-    var waitMs = 0L
-    var polls = 0
-    var done = false
-    while (!done && !stopRequested) {
-      if (waitMs > 0) {
-        // sleep in 1 s slices so requestStop() takes effect promptly
-        var left = waitMs
-        while (left > 0 && !stopRequested) {
-          sleepMs(math.min(left, 1000L)); left -= 1000L
-        }
-      }
-      if (!stopRequested) {
-        polls += 1
-        val ids = runOnce(nowUs(),
-          limit = if (single) Some(1) else None, strict = single)
-        copied ++= ids
-        onPoll(polls, ids)
-        if (single || (exitOnEmpty && ids.isEmpty)) done = true
-        else waitMs = if (ids.nonEmpty) 0L else config.checkIntervalUs / 1000L
-      }
-    }
-    copied.result()
-  }
+      onPoll: (Int, Seq[Long]) => Unit = (_, _) => ()): Seq[Long] =
+    loop.run(config.checkIntervalUs / 1000L, single, exitOnEmpty, sleepMs,
+      onPoll)(runOnce(nowUs(), limit = if (single) Some(1) else None,
+        strict = single))
 }

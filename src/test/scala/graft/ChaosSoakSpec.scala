@@ -69,27 +69,34 @@ class ChaosSoakSpec extends SparkSpec {
       }
 
     @volatile var stop = false
-    val errors = mutable.ArrayBuffer.empty[Throwable] // promoter-loop escapes
+    val errors = mutable.ArrayBuffer.empty[Throwable] // promoter-run escapes
     val repDone = new AtomicBoolean(false)
 
+    // the replicator keeps its own loop: the soak needs 2-chunk polls
     val repThread = new Thread(() => {
       try {
         while (!stop && statuses().size < nChunks)
           replicator.runOnce(nowUs = far, limit = Some(2))
       } finally repDone.set(true)
     }, "chaos-replicator")
+    // uploader and promoter run the services' own poll loop, idle polls
+    // sleeping a short check interval, and end on requestStop
     val uploader = new ChunkUploader(spark, promoter, remoteRoot,
       notify = (id, _) => promoter.stageChunks(Seq(id)))
+    val upLoop = new ServiceLoop
     val upThread = new Thread(() => {
-      while (!stop) { uploader.runOnce(); Thread.sleep(20L) }
+      upLoop.run(20L)(uploader.runOnce()); ()
     }, "chaos-uploader")
+    // the induced crash ends a promoter run the way it ends the CLI
+    // service: restart until a run ends normally, which only a stop does
+    // (a stop landing between a crash and its restart ends the restart)
     val promoThread = new Thread(() => {
-      while (!stop) {
+      var running = true
+      while (running) {
         try {
-          promoter.stageUploaded()
-          promoter.promote(Some(2))
+          promoter.run(maxChunksPerPoll = Some(2), checkIntervalMs = 20L)
+          running = false
         } catch { case e: Throwable => errors.synchronized(errors += e) }
-        Thread.sleep(20L)
       }
     }, "chaos-promoter")
     Seq(repThread, upThread, promoThread).foreach(_.start())
@@ -127,6 +134,8 @@ class ChaosSoakSpec extends SparkSpec {
       s.size == nChunks && s.values.forall(_ == ChunkStatus.Promoted)
     }
     stop = true
+    upLoop.requestStop()
+    promoter.requestStop()
     Seq(repThread, upThread, promoThread).foreach(_.join(30000L))
 
     // ---- end state == failure-free serial run, exactly once
@@ -152,7 +161,7 @@ class ChaosSoakSpec extends SparkSpec {
     assert(cat.read(spark, "staging.DiaObject").count() == 0L)
     assert(cat.read(spark, "staging.updates").count() == 0L)
 
-    // the only promoter-loop escape is the induced crash; everything else
+    // the only promoter-run escape is the induced crash; everything else
     // (CAS contention, concurrent staging) resolved internally
     val unexpected = errors.synchronized(errors.toList).filterNot(e =>
       Option(e.getMessage).exists(_.contains("induced-crash")) ||

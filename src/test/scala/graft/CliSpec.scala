@@ -135,6 +135,23 @@ class CliSpec extends SparkSpec {
     assert(copied.isEmpty)
   }
 
+  test("requestStop before run ends that run after zero polls; the " +
+      "instance then runs normally") {
+    val apdbRoot = tmpDir("prestop-apdb")
+    ParquetApdb.stage(spark, apdbRoot,
+      new graft.cli.SyntheticApdb(spark, 3, 1).chunkData(1L))
+    val ppdb = new PpdbSpark(spark, new VersionedCatalog(tmpDir("prestop-ppdb")))
+    ppdb.init()
+    val rep = new Replicator(spark, new ParquetApdb(spark, apdbRoot), ppdb)
+    var polls = 0
+    rep.requestStop() // e.g. a SIGTERM before the first poll
+    assert(rep.run(exitOnEmpty = true, onPoll = (_, _) => polls += 1).isEmpty)
+    assert(polls == 0)
+    // the stop was spent on that run: the next one polls and copies
+    assert(rep.run(exitOnEmpty = true, onPoll = (_, _) => polls += 1) == Seq(1L))
+    assert(polls == 2)
+  }
+
   test("parquet APDB round-trips update records through the raw form") {
     import graft.schema.UpdateRecord
     val apdbRoot = tmpDir("upd-apdb")

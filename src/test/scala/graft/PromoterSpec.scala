@@ -381,29 +381,6 @@ class PromoterSpec extends SparkSpec {
     assert(p.promote() == Seq(2L))
   }
 
-  test("streaming host: manifest arrivals drive stage+promote exactly once") {
-    val cat = new VersionedCatalog(tmpDir("promo"))
-    val exportRoot = tmpDir("export")
-    val p = new Promoter(spark, cat, exportRoot)
-    p.init()
-    val apdb = new TestApdb(spark, nObjects = 4, nChunks = 3)
-    Seq(1L, 2L, 3L).foreach(id => p.exportChunk(apdb.chunkData(id)))
-
-    val ckpt = tmpDir("ckpt")
-    val q = graft.streaming.ChunkStream.run(spark, p, exportRoot, ckpt)
-    q.awaitTermination(180000)
-    val statuses = cat.read(spark, "PpdbReplicaChunk")
-      .select("status").collect().map(_.getString(0)).toSeq
-    assert(statuses == Seq("promoted", "promoted", "promoted"), statuses)
-    assert(cat.read(spark, "internal.DiaObject").count() == 12)
-
-    // replay with the same checkpoint: nothing re-processed
-    val commitBefore = cat.current._1
-    val q2 = graft.streaming.ChunkStream.run(spark, p, exportRoot, ckpt)
-    q2.awaitTermination(60000)
-    assert(cat.current._1 == commitBefore)
-  }
-
   test("update-mode re-export re-promotes as a MERGE: rows land exactly " +
       "once with the regenerated values") {
     val cat = new VersionedCatalog(tmpDir("promo"))

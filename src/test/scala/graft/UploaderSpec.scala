@@ -11,7 +11,7 @@ import graft.schema.PpdbSchema
 
 /** Remote-FS chunk uploader (S10/S11): full-fidelity upload through the
   * Hadoop FileSystem API, uploaded-state staging, rollback of partial
-  * uploads, and the reference's loop knobs.
+  * uploads, and the tolerant/strict failure modes.
   */
 class UploaderSpec extends SparkSpec {
   import spark.implicits._
@@ -203,22 +203,40 @@ class UploaderSpec extends SparkSpec {
       PpdbSchema.ChunkStatus.Uploaded))
   }
 
-  test("exitOnError propagates; exitOnEmpty ends the run loop") {
+  test("exitOnError propagates; a tolerant poll reports the failure and " +
+      "the next poll retries after rollback") {
     val (p, apdb, remote) = fresh(1)
     p.exportChunk(apdb.chunkData(1))
+    // a FILE where the chunk's DiaSource dir must go: the copy fails
     val prefix = Paths.get(remote.stripPrefix("file://"), "1")
-    Files.createDirectories(prefix)
-    Files.write(prefix.resolve("DiaSource"), "junk".getBytes)
+    def plantJunk(): Unit = {
+      Files.createDirectories(prefix)
+      Files.write(prefix.resolve("DiaSource"), "junk".getBytes)
+      ()
+    }
+    def status() = p.catalog.read(spark, "PpdbReplicaChunk")
+      .select("status").collect().map(_.getString(0)).toSeq
+    plantJunk()
     val strict = new ChunkUploader(spark, p, remote, exitOnError = true)
     intercept[ChunkUploadException] { strict.runOnce() }
-    // tolerant run loop: first poll fails the chunk, uploads nothing, and
-    // exitOnEmpty does not trigger (non-empty poll); bound the loop
-    val tolerant = new ChunkUploader(spark, p, remote, exitOnEmpty = true,
-      waitIntervalMs = 1L)
-    tolerant.run(maxPolls = 3)
-    val status = p.catalog.read(spark, "PpdbReplicaChunk")
-      .select("status").collect().map(_.getString(0)).toSeq
-    assert(status == Seq(PpdbSchema.ChunkStatus.Uploaded),
-      "retry within the run loop succeeded after rollback")
+    // the strict failure rolled the junk prefix back; plant it again so
+    // the tolerant poll fails too
+    assert(!Files.exists(prefix))
+    plantJunk()
+    val tolerant = new ChunkUploader(spark, p, remote)
+    Metrics.reset()
+    val err = new java.io.ByteArrayOutputStream()
+    val savedErr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val polled = try tolerant.runOnce() finally System.setErr(savedErr)
+    assert(polled.isEmpty)
+    assert(status() == Seq(PpdbSchema.ChunkStatus.Exported))
+    assert(err.toString.contains("chunk 1: upload failed"), err.toString)
+    val failures = Metrics.snapshot().filter(_.metric == "upload_failures")
+    assert(failures.map(f => (f.tags, f.value)) ==
+      Seq((Map("chunk_id" -> "1"), Some(1.0))), failures)
+    // the failure rolled the junk back again: the next poll uploads
+    assert(tolerant.runOnce() == Seq(1L), "retry after rollback uploads")
+    assert(status() == Seq(PpdbSchema.ChunkStatus.Uploaded))
   }
 }
